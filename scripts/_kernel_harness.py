@@ -1,11 +1,17 @@
-"""Ad-hoc giant-bucket kernel breakdown harness (optimization round 11).
+"""Ad-hoc giant-bucket kernel breakdown harness.
 
-Replicates the fused fuzzy-dedup front end (signatures + hashed
-shingles + band explode) in plain Python on the sf0.1 documents table,
-then times each internal stage of the m x m matrix bucket_verify path
-on the real giant bucket. No Spark; relative timings only.
+Replicates the fuzzy-dedup front end (signatures + hashed shingles +
+band explode) in plain Python on a documents table (default: the sf0.1
+one), then times the stages of the bucket verifier
+(tensorflow_recorder_spark/functions/jaccard_verify.py) on the largest
+real buckets: the m x m matrix path stage by stage, the whole default
+call, and the chunked path forced on the same bucket. No Spark;
+relative timings only.
+
+    python scripts/_kernel_harness.py [documents.parquet]
 """
 import hashlib
+import os
 import sys
 import time
 
@@ -59,104 +65,42 @@ sizes = sorted(((len(v), k) for k, v in groups.items()), reverse=True)
 print(f"banding: {time.perf_counter()-t0:.3f}s  n_groups={len(groups)}")
 print("top groups:", sizes[:8])
 
-sys.path.insert(0, "/root/repo")
-from tensorflow_recorder_spark.operators.dedup import (  # noqa: E402
-    _intersect_counts_csr,
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+from tensorflow_recorder_spark.functions.jaccard_verify import (  # noqa: E402
+    BucketSets,
+    drop_earlier_bands,
+    slot_agreement,
+    verify_bucket,
 )
 
 
-def verify_timed(rows, band_idx):
-    tm = {}
-
-    def tick(name, t0):
-        tm[name] = tm.get(name, 0.0) + (time.perf_counter() - t0)
-        return time.perf_counter()
-
-    m = len(rows)
-    ids = ids_all[rows]
+def timed(fn, *args, **kw):
     t0 = time.perf_counter()
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    rows = np.asarray(rows)[order]
-    M8 = sigs[rows]
-    arrs = [sh_arrays[r] for r in rows]
-    lens = np.fromiter((len(a) for a in arrs), np.int64, m)
-    flat = np.concatenate(arrs)
-    vocab_, indices = np.unique(flat, return_inverse=True)
-    indices = indices.astype(np.int64)
-    indptr = np.zeros(m + 1, dtype=np.int64)
-    np.cumsum(lens, out=indptr[1:])
-    sizes_ = lens.astype(np.float64)
-    t0 = tick("prep(unique/csr)", t0)
-
-    A = np.zeros((m, m), dtype=np.uint8)
-    for j in range(NH):
-        vals = M8[:, j]
-        order2 = np.argsort(vals, kind="stable")
-        sv = vals[order2]
-        starts = np.flatnonzero(np.concatenate(([True], sv[1:] != sv[:-1])))
-        bounds = np.concatenate((starts, [m]))
-        for k in range(len(starts)):
-            grp = order2[bounds[k]:bounds[k + 1]]
-            if len(grp) > 1:
-                A[np.ix_(grp, grp)] += 1
-    t0 = tick("A-matrix paint", t0)
-
-    Km = (A.astype(np.float64) / float(NH)) >= MIN_EST
-    t0 = tick("est floor", t0)
-    for b in range(band_idx):
-        cols = [M8[:, b * RPB + r_] for r_ in range(RPB)]
-        order2 = np.lexsort(cols[::-1])
-        same = np.ones(m, dtype=bool)
-        same[0] = False
-        for c in cols:
-            sc = c[order2]
-            same[1:] &= sc[1:] == sc[:-1]
-        starts = np.flatnonzero(~same)
-        bounds = np.concatenate((starts, [m]))
-        for k in range(len(starts)):
-            grp = order2[bounds[k]:bounds[k + 1]]
-            if len(grp) > 1:
-                Km[np.ix_(grp, grp)] = False
-    t0 = tick("earlier-band dedup", t0)
-    Km = np.triu(Km, k=1)
-    ai, bi = np.nonzero(Km)
-    t0 = tick("triu+nonzero", t0)
-    ai = ai.astype(np.int64)
-    bi = bi.astype(np.int64)
-    est = A[ai, bi].astype(np.float64) / float(NH)
-    nv = len(vocab_)
-    csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-    blas_cost = m * m * nv * 0.04
-    budget_ok = m * nv * 4 <= (256 << 20)
-    t0 = tick("pair gather", t0)
-    if budget_ok and blas_cost < csr_cost:
-        Mf32 = np.zeros((m, nv), dtype=np.float32)
-        rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-        Mf32[rws, indices] = 1.0
-        t0 = tick("dense build", t0)
-        G = Mf32 @ Mf32.T
-        t0 = tick("sgemm", t0)
-        inter = G[ai, bi].astype(np.int64).astype(np.float64)
-        t0 = tick("G gather", t0)
-        kernel = "blas"
-    else:
-        inter = _intersect_counts_csr(indptr, indices, ai, bi).astype(np.float64)
-        t0 = tick("csr kernel", t0)
-        kernel = "csr"
-    jac = inter / (sizes_[ai] + sizes_[bi] - inter)
-    keep2 = jac >= THR
-    n_out = int(keep2.sum())
-    t0 = tick("jaccard+filter", t0)
-    return m, len(ai), n_out, kernel, tm
+    out = fn(*args, **kw)
+    return out, time.perf_counter() - t0
 
 
 for (sz, key) in sizes[:4]:
-    rows = groups[key]
-    t_all = time.perf_counter()
-    m, npairs, nout, kern, tm = verify_timed(rows, key[0])
-    total = time.perf_counter() - t_all
-    print(f"\nbucket m={m} band={key[0]} pairs_surv_est={npairs} out={nout} "
-          f"kernel={kern} total={total:.3f}s")
-    for k_, v in sorted(tm.items(), key=lambda x: -x[1]):
+    rows = np.asarray(groups[key])
+    band_idx = key[0]
+    order = np.argsort(ids_all[rows], kind="stable")
+    rows = rows[order]
+    ids, M8 = ids_all[rows], sigs[rows]
+    sh = [sh_arrays[r] for r in rows]
+    tm = {}
+    sets, tm["prep (unique/csr)"] = timed(BucketSets, sh)
+    A, tm["slot agreement"] = timed(slot_agreement, M8, NH)
+    K = (A.astype(np.float64) / float(NH)) >= MIN_EST
+    _, tm["earlier-band drop"] = timed(drop_earlier_bands, K, M8, band_idx, RPB)
+    out, tm["verify_bucket"] = timed(
+        verify_bucket, band_idx, ids, M8, sh, NH, RPB, MIN_EST, THR
+    )
+    chunked, tm["verify_bucket chunked"] = timed(
+        verify_bucket, band_idx, ids, M8, sh, NH, RPB, MIN_EST, THR,
+        matrix_budget=0,
+    )
+    assert all(np.array_equal(x, y) for x, y in zip(out, chunked))
+    print(f"\nbucket m={len(rows)} band={band_idx} vocab={sets.nv} "
+          f"out={len(out[0])}")
+    for k_, v in tm.items():
         print(f"  {k_:22s} {v:.3f}s")

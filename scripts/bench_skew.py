@@ -12,9 +12,11 @@ Arms:
     the skewed data (exactness under skew, not just speed).
   * p4_leakage_safe_split — uniform vs skewed documents (one ~250-doc
     boilerplate near-dup family, the hub-cluster case); the defense
-    being demonstrated is inside lsh_verified_pairs (banded join +
-    size-ratio prune + candidate-only verify): wall stays bounded and
-    the family lands in ONE split (leakage-safety under the hub).
+    being demonstrated is inside lsh_verified_pairs (candidates and
+    their exact verify stay inside each LSH bucket, with the hub
+    family's bucket verified by the vectorized bucket kernels): wall
+    stays bounded and the family lands in ONE split (leakage-safety
+    under the hub).
 
 Writes SCALING.json["skew"]; SCALE.md quotes it. Plan-shape assertions
 (salt column in the hot join keys, no unbounded crossJoin) live in

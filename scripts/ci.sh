@@ -22,6 +22,9 @@ python scripts/fuzz_codecs.py
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== benchmark tests =="
+python -m pytest perfbench -q
+
 echo "== full-registry oracle check (sf0.01) =="
 python scripts/check_oracle.py
 

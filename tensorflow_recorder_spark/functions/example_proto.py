@@ -281,6 +281,8 @@ def _pa_scalar_array(values, pa_type, np_dtype):
     n = len(a)
     if n == 0:
         return np.zeros(0, dtype=np_dtype), np.zeros(0, dtype=bool)
+    if a.buffers()[1] is None:  # an all-null array may carry no data buffer
+        return None
     vals = np.frombuffer(a.buffers()[1], dtype=np_dtype, count=n + a.offset)[
         a.offset :
     ]
@@ -304,12 +306,16 @@ def _float_scalar_entries(values, prefix, null_entry):
         return []
     vals = np.where(nulls, 0.0, vals)
     nulls = nulls | np.isnan(vals)
+    # a finite double beyond float32 range casts to +-inf here, where
+    # struct.pack('<f', v) raises OverflowError: let the exact loop raise
+    with np.errstate(over="ignore"):
+        f4 = vals.astype("<f4")
+    if (np.isinf(f4) & np.isfinite(vals)).any():
+        return None
     p = len(prefix)
     mat = np.empty((n, p + 4), dtype=np.uint8)
     mat[:, :p] = np.frombuffer(prefix, dtype=np.uint8)
-    mat[:, p:] = (
-        vals.astype("<f4").view(np.uint8).reshape(n, 4)
-    )
+    mat[:, p:] = f4.view(np.uint8).reshape(n, 4)
     entries = _slice_rows(mat)
     if nulls.any():
         for i in np.flatnonzero(nulls).tolist():

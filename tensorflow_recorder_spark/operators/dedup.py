@@ -355,72 +355,6 @@ def hashed_shingle_expr(text_col: str, k: int = 5, pre_lowered: bool = False) ->
     )
 
 
-def _hashed_shingles_arrow(
-    df: DataFrame, text_col: str, id_col: str, shingle_len: int = 5
-) -> DataFrame:
-    """Arrow fast path for :func:`hashed_shingle_expr` (r11): per-doc
-    arrays of 32-bit md5-slice hashes of the distinct lowercased
-    character k-grams, value- and order-identical to the SQL expression
-    (first-occurrence order of the distinct shingle STRINGS, then
-    ``int(md5(s)[:8], 16)`` elementwise — so md5-collision duplicates
-    are preserved exactly as ``transform(array_distinct(...), md5)``
-    produces them).
-
-    Why not the SQL expression: it computes one md5 per text POSITION
-    (JVM digest + hex + conv + allocation per shingle occurrence). The
-    corpus's distinct-shingle vocabulary is far smaller than its
-    position count (2,041 vs 1.5 M at sf0.1 — template-heavy corpora
-    repeat their grams), and a per-task intern cache hashes each
-    distinct gram once: ~700x fewer digests, measured 1.4 s -> 0.35 s
-    on the sf0.1 verify stage with bit-identical output. The cache is
-    bounded (dropped past 4 M entries) so a high-diversity task cannot
-    grow it without limit.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    k = shingle_len
-    id_type = df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("__sh", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def batches(it):
-        md5 = hashlib.md5
-        cache: dict[str, int] = {}
-
-        def h(g: str) -> int:
-            v = cache.get(g)
-            if v is None:
-                v = int.from_bytes(md5(g.encode()).digest()[:4], "big")
-                if len(cache) < 4_000_000:
-                    cache[g] = v
-            return v
-
-        for pdf in it:
-            out = []
-            for t in pdf[text_col]:
-                t = t.lower()
-                m = max(len(t) - k + 1, 1)
-                # dict.fromkeys: distinct in first-occurrence order,
-                # matching SQL array_distinct
-                seen = dict.fromkeys(t[i : i + k] for i in range(m))
-                out.append(
-                    np.fromiter(
-                        (h(g) for g in seen), dtype=np.int64, count=len(seen)
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "__sh": out})
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -497,19 +431,15 @@ def _signatures_and_shingles_arrow(
     shingle_len: int,
 ) -> DataFrame:
     """One map-only pass emitting BOTH the MinHash signature and the
-    hashed shingle array per document (r11, the fused fuzzy-dedup
-    front end).
+    hashed shingle array per document (the fuzzy-dedup front end).
 
-    The staged pipeline derives signatures and (for candidate docs
-    only) shingle arrays from the SAME per-doc gram set in two separate
-    corpus passes, with a semi-join + repartition + checkpoint between
-    them. When the verify stage is fused into the LSH buckets the
-    shingle payload is needed for every banded doc anyway, so this pass
-    shares one gram-set build and one batch-vocabulary intern between
-    the salted signature digests and the unsalted verify hashes —
-    per distinct gram: ``nd`` salted md5s (signature slots) + 1
-    unsalted md5 (verify hash), exactly the bytes the SQL expressions
-    hash, bit-identical outputs.
+    The verify runs inside the LSH buckets, so every banded doc needs
+    its shingle payload anyway; this pass shares one gram-set build and
+    one batch-vocabulary intern between the salted signature digests
+    and the unsalted verify hashes — per distinct gram: ``nd`` salted
+    md5s (signature slots) + 1 unsalted md5 (verify hash), exactly the
+    bytes the SQL expressions (:func:`minhash_signatures`,
+    :func:`hashed_shingle_expr`) hash, bit-identical outputs.
 
     Output: (id_col, mh_0..mh_{n-1}, __sh array<long>).
     """
@@ -572,733 +502,45 @@ def _signatures_and_shingles_arrow(
     return src.mapInPandas(batches, schema=out_schema)
 
 
-_GIANT_BUCKET_ROWS = 1024
-
-# r12: recommended PRODUCTION threshold for decomposing a giant bucket
-# across TASKS (block-verify stage) instead of verifying it inside one
-# in-task pass. Below ~4096 rows the m x m matrix path handles the
-# bucket in-task in well under a second (4096² byte-writes ~= the
-# 16 MB matrix budget; measured at sf0.1: the 1983-doc family's task
-# is 1.4 s of which most is serializing its own ~1.9M result pairs —
-# a cost deferral relocates but cannot remove), so the block stage's
-# extra stage boundaries (~1 s/query measured) would cost more than
-# the straggler they remove. The LOCAL DEFAULT IS OFF (0): no measured
-# dataset — sf0.1 or the derived decades, whose replicas keep disjoint
-# shingle universes — produces a bucket beyond ~2k rows, so locally
-# the branch would be pure insurance premium. On a real 100 TB corpus
-# whose boilerplate families can exceed the matrix budget set
-# SPARK_GRAFT_DEFER_ROWS=4096 (or pass ``defer_rows``): beyond that
-# size the in-task work grows quadratically while block-stage tasks
-# stay bounded by construction. Parity of the block path is pinned by
-# tests at forced thresholds either way.
-_DEFER_BUCKET_ROWS = 4096
-
-
-def _bucket_thread_count(m: int, bytes_per_thread: int) -> int:
-    """Thread-pool width for ONE giant bucket's in-task kernels.
-
-    A template-family bucket is a single ``applyInPandas`` group — one
-    task, the stage's straggler while sibling tasks finish and leave
-    cores idle (local[32] and a 100 TB executor alike: the group is
-    unsplittable by the shuffle). The heavy kernels inside it decompose
-    exactly (per-slot paints SUM into the agreement matrix; sgemm
-    panels over 0/1 indicator rows are integer sums < 2^24, exact in
-    float32 under ANY split), and numpy/BLAS release the GIL, so a
-    small in-task thread pool recovers the idle cores without touching
-    the plan. Width: conservative fraction of the machine (the stage's
-    OTHER tasks are still running at stage start), memory-capped by the
-    per-thread scratch the caller will allocate, env-overridable for
-    cluster tuning (``SPARK_GRAFT_BUCKET_THREADS``).
-    """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_BUCKET_THREADS")
-    if env is not None:
-        cap = max(1, int(env))
-    else:
-        cap = max(2, min(8, (os.cpu_count() or 8) // 4))
-    mem_cap = max(1, (256 << 20) // max(bytes_per_thread, 1))
-    return max(1, min(cap, mem_cap))
-
-
-def _lsh_verified_fused(
+def _banded_payload(
     df: DataFrame,
     text_col: str,
     id_col: str,
     num_hashes: int,
     bands: int,
     shingle_len: int,
-    min_est_jaccard: float,
-    threshold: float,
-    chunk_pairs: int = 1 << 20,
-    giant_rows: int | None = None,
-    giant_threads: int | None = None,
-    matrix_budget: int = 1 << 24,
-    defer_rows: int | None = None,
-    defer_block: int = 512,
+    side: int | None = None,
 ) -> DataFrame:
-    """Fused single-shuffle fuzzy dedup (r11): signatures + shingles in
-    one map pass, band explode, and candidate generation + exact-
-    Jaccard verification INSIDE each LSH bucket.
-
-    r12 (verdict item 3): two structural changes.
-
-    * The bucket verify is ONE ``mapInPandas`` call per shuffle
-      partition instead of one ``applyInPandas`` group per bucket:
-      the hash repartition already co-locates each bucket's rows, and
-      the per-group pandas bookkeeping over ~90k mostly-singleton
-      buckets was the stage's dominant cost at sf0.1 (~1.5 s/task vs
-      ~0.3 s of pair math). The partition pass pays one concat + one
-      lexsort and verifies buckets as numpy slices.
-    * A GIANT bucket (>= ``defer_rows`` docs when enabled) is not
-      verified in-task — that group's O(m²) pair work is one
-      unsplittable task, the stage's straggler on local[32] and on a
-      saturated 100 TB executor alike (the r11 in-task thread pool
-      only recovered idle SIBLING cores, a local-mode-shaped bet).
-      A second pass over the SAME exchange (AQE stage reuse: the
-      corpus signature pass and its shuffle run once) re-emits only
-      giant buckets' payload into <= 16 contiguous id-range blocks of
-      ~``defer_block`` docs; the block stage keyed (band_key, band,
-      block_a, block_b) gives every upper-triangle block of the pair
-      matrix its OWN task (exact decomposition: each i<j pair exists
-      in exactly one block pair, and id-range blocks keep cross-block
-      pairs id-ordered). Default OFF locally / enable at 4096 in
-      production — see _DEFER_BUCKET_ROWS for the measured tradeoff
-      (below the matrix budget the in-task pass is sub-second and
-      dominated by serializing its own result pairs, which deferral
-      relocates but cannot remove; the branch's stage boundaries cost
-      ~1 s/query). ``defer_rows=0`` (the local default, env
-      SPARK_GRAFT_DEFER_ROWS) yields the single-stage plan.
-
-    The staged pipeline (:func:`lsh_verified_pairs` machinery) runs
-    ~13 Spark jobs at sf0.1: band self-join, candidate checkpoint,
-    candidate-id semi-join, shingle pass + checkpoint, routing stats,
-    then the verify join/cogroup — each boundary a full
-    materialization. But every decision it makes is bucket-local: a
-    candidate pair exists iff the two docs share a band bucket, the
-    first-matching-band rule and est_jaccard need only the two
-    signatures (carried with the docs), and the exact Jaccard needs
-    only the two shingle arrays (also carried). So this plan ships each
-    doc's (signature, shingle array) payload into its ``bands`` buckets
-    — ONE exchange, ~bands x corpus payload — and one cogroup-free
-    ``applyInPandas`` per bucket enumerates in-bucket pairs
-    (chunked, est-filtered, first-band-deduped) and verifies survivors
-    with the same popcount/CSR kernels as the blocked path. Measured at
-    sf0.1: e1_lsh_verified 9.5 s -> ~2.5 s, bit-identical output (the
-    per-pair arithmetic is unchanged: est = agreeing_slots/num_hashes
-    in float64, jaccard = |A∩B|/(|A|+|B|-|A∩B|) in float64).
-
-    Worst-case note: a degenerate bucket (m near-identical docs) costs
-    O(m^2) est-filter compares here — the SAME asymptotics as the
-    staged band self-join, which materializes those m^2 rows in the
-    JVM; the fused form does them as vectorized int compares without
-    materializing the non-candidates, so it is never worse.
-    """
-    import os
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    nh, rpb = num_hashes, num_hashes // bands
-    combo = _signatures_and_shingles_arrow(
-        df, text_col, id_col, num_hashes, shingle_len
-    )
+    """Each document's (signature, shingle array) payload from one map
+    pass, exploded into its ``bands`` LSH buckets (band_idx, band_key =
+    md5 over the band's slots — the banding of
+    :func:`lsh_candidate_pairs`); ``side`` tags the rows of one input
+    of the bipartite plan."""
+    rpb = num_hashes // bands
     band_structs = []
     for b in range(bands):
         slots = [f"mh_{b * rpb + r}" for r in range(rpb)]
         key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
         band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
-    banded = combo.select(
+    tag = [] if side is None else ["__side"]
+    mh = [f"mh_{j}" for j in range(num_hashes)]
+    combo = _signatures_and_shingles_arrow(
+        df, text_col, id_col, num_hashes, shingle_len
+    )
+    return combo.select(
+        *[F.lit(side).alias(c) for c in tag],
         F.col(id_col),
-        *[F.col(f"mh_{j}") for j in range(nh)],
+        *[F.col(c) for c in mh],
         F.col("__sh"),
         F.explode(F.expr("array(" + ", ".join(band_structs) + ")")).alias(
             "band"
         ),
-    ).select(
-        id_col,
-        *[f"mh_{j}" for j in range(nh)],
-        "__sh",
-        "band.band_idx",
-        "band.band_key",
-    )
-
-    id_type = df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("est_jaccard", T.DoubleType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-    min_est = float(min_est_jaccard)
-    thr = float(threshold)
-    defer_schema = T.StructType(
-        [
-            T.StructField("__gk", T.StringType()),
-            T.StructField("__ga", T.IntegerType()),
-            T.StructField("__gb", T.IntegerType()),
-            T.StructField("__blk", T.IntegerType()),
-            T.StructField("__band", T.IntegerType()),
-            T.StructField("__id", id_type),
-            T.StructField("__mh", T.ArrayType(T.LongType())),
-            T.StructField("__shd", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    _none4 = (
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.float64),
-        np.zeros(0, dtype=np.float64),
-    )
-
-    def verify_arrays(band_idx, ids, M8, sh_vals):
-        """Candidate enumeration + exact verification for ONE bucket,
-        given id-sorted numpy inputs (ids, nh-column signature matrix,
-        object array of shingle arrays). Returns (id_a, id_b, est, jac)
-        arrays — the r12 partition pass calls this per bucket SLICE so
-        no per-group pandas frame is ever built (the r11 per-group
-        applyInPandas overhead over ~90k mostly-singleton buckets was
-        the stage's real cost: ~1.5 s/task of group bookkeeping against
-        ~0.3 s of pair math)."""
-        empty = _none4
-        m = len(ids)
-        arrs = [np.asarray(a, dtype=np.int64) for a in sh_vals]
-        lens = np.fromiter((len(a) for a in arrs), np.int64, m)
-        flat = np.concatenate(arrs)
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-
-        g_rows = _GIANT_BUCKET_ROWS if giant_rows is None else giant_rows
-
-        def pick_threads(bytes_per_thread):
-            if m < g_rows:
-                return 1
-            if giant_threads is not None:
-                return max(1, giant_threads)
-            return _bucket_thread_count(m, bytes_per_thread)
-
-        # m x m MATRIX fast path (r11): per-pair fancy-index gathers
-        # cost ~0.7 µs/pair in numpy, and a template-family bucket is
-        # nearly ALL pairs (measured: 1.92M of the giant sf0.1
-        # bucket's 1.97M pairs survive the est filter — the filter WAS
-        # the task's wall at 1.3 s). Build the slot-agreement count
-        # matrix from per-slot VALUE GROUPS instead: docs agreeing on
-        # a slot form groups, and each group paints a sub-square of
-        # A (+1 per slot) — O(m² + Σ group²) byte writes. The
-        # earlier-band dedup is the same construction over combined
-        # band keys into a bool mask. Every pair's est and the filter
-        # then read straight off the matrices (~0.1 s for the giant
-        # bucket), and only SURVIVORS are ever materialized as pair
-        # index arrays. Identical semantics: est = agreeing slots / nh,
-        # drop if any earlier band fully agrees.
-        if m * m <= matrix_budget:  # <= 64 MB of uint8+bool matrices
-            # giant-bucket in-task threading (r11 continuation): the
-            # slot paints and the sgemm panels below decompose exactly
-            # — see _bucket_thread_count. 1 thread (the common case)
-            # takes the identical serial code path. giant_rows /
-            # giant_threads are test hooks (closure-captured, so they
-            # reach the executors by value).
-            nthreads = pick_threads(m * m)
-
-            def paint_slots(js, out):
-                for j in js:
-                    vals = M8[:, j]
-                    order2 = np.argsort(vals, kind="stable")
-                    sv = vals[order2]
-                    starts = np.flatnonzero(
-                        np.concatenate(([True], sv[1:] != sv[:-1]))
-                    )
-                    bounds = np.concatenate((starts, [m]))
-                    for k in range(len(starts)):
-                        grp = order2[bounds[k] : bounds[k + 1]]
-                        if len(grp) > 1:
-                            out[np.ix_(grp, grp)] += 1
-                return out
-
-            if nthreads > 1 and nh > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                nt = min(nthreads, nh)
-                slot_sets = [list(range(t, nh, nt)) for t in range(nt)]
-                with ThreadPoolExecutor(nt) as pool:
-                    partials = list(
-                        pool.map(
-                            paint_slots,
-                            slot_sets,
-                            [
-                                np.zeros((m, m), dtype=np.uint8)
-                                for _ in range(nt)
-                            ],
-                        )
-                    )
-                # uint8 sum is exact: each partial entry <= nh <= 255
-                A = partials[0]
-                for p in partials[1:]:
-                    A += p
-            else:
-                A = paint_slots(range(nh), np.zeros((m, m), dtype=np.uint8))
-            # est floor in exact float (same comparison as the chunked
-            # path: agree / nh >= min_est)
-            K = (A.astype(np.float64) / float(nh)) >= min_est
-            for b in range(band_idx):
-                # combined band key: group docs agreeing on ALL slots
-                # of band b (lexicographic grouping on the slot tuple)
-                cols = [M8[:, b * rpb + r] for r in range(rpb)]
-                order2 = np.lexsort(cols[::-1])
-                same = np.ones(m, dtype=bool)
-                same[0] = False
-                for c in cols:
-                    sc = c[order2]
-                    same[1:] &= sc[1:] == sc[:-1]
-                # group boundaries where not same
-                starts = np.flatnonzero(~same)
-                bounds = np.concatenate((starts, [m]))
-                for k in range(len(starts)):
-                    grp = order2[bounds[k] : bounds[k + 1]]
-                    if len(grp) > 1:
-                        K[np.ix_(grp, grp)] = False
-            K = np.triu(K, k=1)
-            ai, bi = np.nonzero(K)
-            if len(ai) == 0:
-                return empty
-            ai = ai.astype(np.int64)
-            bi = bi.astype(np.int64)
-            est = A[ai, bi].astype(np.float64) / float(nh)
-            nv = len(vocab)
-            csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-            blas_cost = m * m * nv * 0.04
-            budget_ok = m * nv * 4 <= (256 << 20)
-            if budget_ok and blas_cost < csr_cost:
-                Mf32 = np.zeros((m, nv), dtype=np.float32)
-                rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-                Mf32[rws, indices] = 1.0
-                if nthreads > 1:
-                    # panel sgemm across the in-task pool: every G cell
-                    # is a sum of 0/1 products (an integer < 2^24),
-                    # exact in float32 under any panel split
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    G = np.empty((m, m), dtype=np.float32)
-                    step = -(-m // nthreads)
-                    spans = [
-                        (p0, min(p0 + step, m))
-                        for p0 in range(0, m, step)
-                    ]
-                    with ThreadPoolExecutor(len(spans)) as pool:
-                        list(
-                            pool.map(
-                                lambda s: np.matmul(
-                                    Mf32[s[0] : s[1]],
-                                    Mf32.T,
-                                    out=G[s[0] : s[1]],
-                                ),
-                                spans,
-                            )
-                        )
-                else:
-                    G = Mf32 @ Mf32.T
-                inter = G[ai, bi].astype(np.int64).astype(np.float64)
-            else:
-                inter = _intersect_counts_csr(
-                    indptr, indices, ai, bi
-                ).astype(np.float64)
-            jac = inter / (sizes[ai] + sizes[bi] - inter)
-            keep2 = jac >= thr
-            if not keep2.any():
-                return empty
-            return (
-                ids[ai[keep2]],
-                ids[bi[keep2]],
-                est[keep2],
-                jac[keep2],
-            )
-
-        # chunked path (m^2 beyond the matrix budget — at sf1+ the
-        # template family IS this case). Chunks are independent, so
-        # above the giant threshold they run on the same in-task pool
-        # as the matrix path (identical arithmetic chunk by chunk; the
-        # shared Mf32/delta lazies become lock-guarded one-time
-        # builds). ~40 B/pair of per-chunk scratch caps the pool width.
-        import threading
-
-        state = {"Mf32": None, "delta": None}
-        state_lock = threading.Lock()
-
-        def get_delta(nv):
-            with state_lock:
-                if state["delta"] is None:
-                    state["delta"] = _delta_csr(indptr, indices, nv)
-                return state["delta"]
-
-        def get_Mf32(nv):
-            with state_lock:
-                if state["Mf32"] is None:
-                    Mf32 = np.zeros((m, nv), dtype=np.float32)
-                    rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-                    Mf32[rws, indices] = 1.0
-                    state["Mf32"] = Mf32
-                return state["Mf32"]
-
-        # enumerate i<j pairs in row chunks so peak memory is
-        # O(chunk) pairs however large the bucket
-        rows_per_chunk = max(1, chunk_pairs // m)
-
-        def do_chunk(r0):
-            r1 = min(r0 + rows_per_chunk, m - 1)
-            # direct i<j enumeration for rows [r0, r1): no (chunk x m)
-            # bool allocation (r11: the giant template bucket holds
-            # ~2M pairs; allocation + nonzero was measurable there)
-            lens_i = m - 1 - np.arange(r0, r1, dtype=np.int64)
-            total = int(lens_i.sum())
-            if total == 0:
-                return None
-            cum0 = np.concatenate(([0], np.cumsum(lens_i[:-1])))
-            ai = np.repeat(np.arange(r0, r1, dtype=np.int64), lens_i)
-            bi = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(cum0, lens_i)
-                + ai
-                + 1
-            )
-            # est filter: gather each side's signature ROWS once, then
-            # one vectorized compare — ~4x fewer fancy-index passes
-            # than the previous per-slot M8[ai, j] gathers (r11; the
-            # filter dominates the giant-bucket task)
-            eq = M8[ai] == M8[bi]
-            est = eq.sum(axis=1) / float(nh)
-            keep = est >= min_est
-            # first-matching-band: drop the pair here unless no EARLIER
-            # band also agrees (identical to the staged plan's filter)
-            for b in range(band_idx):
-                keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
-            # this band must actually agree (it does by construction —
-            # same band_key — but hash collisions of md5(concat) cannot
-            # fake slot equality because band_key IS derived from the
-            # slots; no extra check needed)
-            ai, bi, est = ai[keep], bi[keep], est[keep]
-            if len(ai) == 0:
-                return None
-            # Kernel choice per chunk from four measured cost laws
-            # (all exact): the DELTA kernel intersects against the
-            # bucket's majority core — on a near-duplicate family
-            # (exactly what a surviving-pair-dense bucket is) per-pair
-            # work is the tiny edit deltas, not the ~300-element sets
-            # (measured: the sf0.1 giant 1983-doc bucket's 1.9M
-            # surviving pairs verify in ~0.3 s vs ~2 s of sgemm);
-            # BLAS row-block matmul ~0.04 ns per cell-vocab product
-            # (float32 sgemm; counts < 2^24 so exact), CSR mask kernel
-            # ~13 ns per partner element, packed-bitset popcount
-            # ~2.2 ns per pair-vocab-bit. Diverse buckets have an
-            # empty core and fall through to the other three.
-            nv = len(vocab)
-            csize, Mip, Mix, Pip, Pix = get_delta(nv)
-            dlens = (Mip[1:] - Mip[:-1]) + (Pip[1:] - Pip[:-1])
-            delta_cost = (
-                13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
-                if csize
-                else float("inf")
-            )
-            blas_cost = (r1 - r0) * m * nv * 0.04
-            csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-            pop_cost = 2.2 * len(ai) * nv
-            budget_ok = m * nv * 4 <= (256 << 20)
-            if delta_cost < min(blas_cost, csr_cost, pop_cost):
-                inter = _intersect_counts_delta(
-                    csize, Mip, Mix, Pip, Pix, ai, bi
-                ).astype(np.float64)
-            elif budget_ok and blas_cost < min(csr_cost, pop_cost):
-                Mf32 = get_Mf32(nv)
-                panel = Mf32[r0:r1] @ Mf32.T
-                inter = panel[ai - r0, bi].astype(np.int64).astype(
-                    np.float64
-                )
-            elif pop_cost < csr_cost and m * nv <= (256 << 20):
-                inter = _intersect_counts_popcount(
-                    indptr, indices, nv, ai, bi
-                ).astype(np.float64)
-            else:
-                inter = _intersect_counts_csr(
-                    indptr, indices, ai, bi
-                ).astype(np.float64)
-            jac = inter / (sizes[ai] + sizes[bi] - inter)
-            keep2 = jac >= thr
-            if not keep2.any():
-                return None
-            return (
-                ids[ai[keep2]],
-                ids[bi[keep2]],
-                est[keep2],
-                jac[keep2],
-            )
-
-        starts = list(range(0, m - 1, rows_per_chunk))
-        cthreads = min(pick_threads(chunk_pairs * 40), max(len(starts), 1))
-        if cthreads > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(cthreads) as pool:
-                frames = [
-                    f for f in pool.map(do_chunk, starts) if f is not None
-                ]
-        else:
-            frames = [f for f in map(do_chunk, starts) if f is not None]
-        if not frames:
-            return empty
-        return tuple(
-            np.concatenate([f[c] for f in frames]) for c in range(4)
-        )
-
-    if defer_rows is None:
-        # scale knob — rationale and the measured ~1 s/query premium
-        # of keeping the branch in-plan are at _DEFER_BUCKET_ROWS and
-        # in OPTIMIZATION_r12.md §3; local default off, production
-        # SPARK_GRAFT_DEFER_ROWS=4096 for corpora whose near-dup
-        # families can exceed the matrix budget.
-        d_rows = int(os.environ.get("SPARK_GRAFT_DEFER_ROWS", "0"))
-    else:
-        d_rows = int(defer_rows)
-
-    def _prep_partition(batches):
-        """Recover the partition's buckets: the hash repartition on
-        (band_idx, band_key) co-locates every bucket's rows, so one
-        concat + one lexsort makes buckets contiguous AND id-sorted
-        within each bucket (same per-bucket id order as the r11
-        per-group argsort — ids are unique, stability is moot).
-        Returns (bi, bk, ids, M8, sh, starts, bounds) or None. r12:
-        this replaces the per-bucket ``groupBy().applyInPandas`` —
-        profiled at sf0.1, that stage spent ~1.5 s/task building ~90k
-        per-group pandas frames (most buckets are singletons) against
-        ~0.3 s of pair math; the partition pass pays one concat + one
-        sort and skips singleton buckets with a slice bound check."""
-        frames = [f for f in batches]
-        if not frames:
-            return None
-        pdf = (
-            pd.concat(frames, ignore_index=True)
-            if len(frames) > 1
-            else frames[0]
-        )
-        if len(pdf) == 0:
-            return None
-        bi_all = pdf["band_idx"].to_numpy()
-        bk_all = pdf["band_key"].to_numpy()
-        ids_all = pdf[id_col].to_numpy()
-        order = np.lexsort((ids_all, bk_all, bi_all))
-        bi_all = bi_all[order]
-        bk_all = bk_all[order]
-        ids_all = ids_all[order]
-        M8_all = np.column_stack(
-            [pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)]
-        )
-        sh_all = pdf["__sh"].to_numpy()[order]
-        n = len(ids_all)
-        newgrp = np.concatenate(
-            ([True], (bi_all[1:] != bi_all[:-1]) | (bk_all[1:] != bk_all[:-1]))
-        )
-        starts = np.flatnonzero(newgrp)
-        bounds = np.concatenate((starts, [n]))
-        return bi_all, bk_all, ids_all, M8_all, sh_all, starts, bounds
-
-    def pairs_pass(batches):
-        """Verify every non-giant bucket of the partition; giant
-        buckets (>= d_rows) are skipped here — the defer pass (same
-        reused exchange) re-emits their payload for the block stage."""
-        prep = _prep_partition(batches)
-        if prep is None:
-            return
-        bi_all, _bk, ids_all, M8_all, sh_all, starts, bounds = prep
-        res = []
-        for k in range(len(starts)):
-            lo, hi = int(bounds[k]), int(bounds[k + 1])
-            m = hi - lo
-            if m < 2 or (d_rows and m >= d_rows):
-                continue
-            out = verify_arrays(
-                int(bi_all[lo]), ids_all[lo:hi], M8_all[lo:hi], sh_all[lo:hi]
-            )
-            if len(out[0]):
-                res.append(out)
-        if res:
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate([r[0] for r in res]),
-                    "id_b": np.concatenate([r[1] for r in res]),
-                    "est_jaccard": np.concatenate([r[2] for r in res]),
-                    "jaccard": np.concatenate([r[3] for r in res]),
-                }
-            )
-
-    def defer_pass(batches):
-        """mapInArrow pass emitting ONLY giant buckets' (signature,
-        shingle) payload rows, keyed for the block stage: <= 16
-        contiguous id-range blocks of ~defer_block rows; each row
-        ships into its ``nblocks`` block-pair groups (pair (i, j)
-        lands in exactly one group, and id-range blocks keep
-        cross-block pairs id-ordered so id_a < id_b needs no per-pair
-        compare downstream). Arrow-native group counts short-circuit
-        the common case: when no bucket reaches ``d_rows`` the pass
-        returns after one zero-copy count — no pandas conversion of
-        the payload ever happens (measured: the pandas-converting
-        variant cost ~0.3 s/query of pure insurance at sf0.1)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        tbl_parts = [pa.Table.from_batches([b]) for b in batches]
-        if not tbl_parts:
-            return
-        t = pa.concat_tables(tbl_parts)
-        if t.num_rows == 0:
-            return
-        counts = t.group_by(["band_idx", "band_key"]).aggregate(
-            [([], "count_all")]
-        )
-        giant = counts.filter(
-            pc.greater_equal(counts["count_all"], pa.scalar(max(d_rows, 2)))
-        )
-        if giant.num_rows == 0:
-            return
-        arrow_out = to_arrow_schema(defer_schema)
-        for g in range(giant.num_rows):
-            band = giant["band_idx"][g].as_py()
-            gk = giant["band_key"][g].as_py()
-            rows = t.filter(
-                pc.and_(
-                    pc.equal(t["band_idx"], pa.scalar(band)),
-                    pc.equal(t["band_key"], pa.scalar(gk)),
-                )
-            )
-            pdf = rows.to_pandas()
-            m = len(pdf)
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            M8 = np.column_stack(
-                [pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)]
-            )
-            sh = pdf["__sh"].to_numpy()[order]
-            nblocks = min(16, max(2, -(-m // max(1, defer_block))))
-            blk = (np.arange(m, dtype=np.int64) * nblocks) // m
-            idx = np.repeat(np.arange(m, dtype=np.int64), nblocks)
-            other = np.tile(np.arange(nblocks, dtype=np.int64), m)
-            rb = blk[idx]
-            out = pd.DataFrame(
-                {
-                    "__gk": str(gk),
-                    "__ga": np.minimum(rb, other).astype(np.int32),
-                    "__gb": np.maximum(rb, other).astype(np.int32),
-                    "__blk": rb.astype(np.int32),
-                    "__band": np.full(len(idx), band, dtype=np.int32),
-                    "__id": ids[idx],
-                    "__mh": [M8[i] for i in idx],
-                    "__shd": [sh[i] for i in idx],
-                }
-            )
-            yield pa.RecordBatch.from_pandas(
-                out, schema=arrow_out, preserve_index=False
-            )
-
-    def block_verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="object"),
-                "id_b": pd.Series(dtype="object"),
-                "est_jaccard": pd.Series(dtype="float64"),
-                "jaccard": pd.Series(dtype="float64"),
-            }
-        )
-        ga = int(pdf["__ga"].iloc[0])
-        gb = int(pdf["__gb"].iloc[0])
-        band_idx = int(pdf["__band"].iloc[0])
-        ids = pdf["__id"].to_numpy()
-        blk = pdf["__blk"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        blk = blk[order].astype(np.int64)
-        M8 = np.asarray(
-            [np.asarray(v, dtype=np.int64) for v in pdf["__mh"].iloc[order]]
-        )
-        arrs = [
-            np.asarray(a, dtype=np.int64) for a in pdf["__shd"].iloc[order]
-        ]
-        mm = len(ids)
-        lens = np.fromiter((len(a) for a in arrs), np.int64, mm)
-        flat = np.concatenate(arrs) if mm else np.zeros(0, dtype=np.int64)
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(mm + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-        if ga == gb:
-            ai, bi = np.triu_indices(mm, k=1)
-            ai = ai.astype(np.int64)
-            bi = bi.astype(np.int64)
-        else:
-            a_idx = np.flatnonzero(blk == ga)
-            b_idx = np.flatnonzero(blk == gb)
-            ai = np.repeat(a_idx, len(b_idx)).astype(np.int64)
-            bi = np.tile(b_idx, len(a_idx)).astype(np.int64)
-        if len(ai) == 0:
-            return empty
-        ai, bi, est, jac = _verify_block_pairs(
-            M8, lens, indptr, indices, len(vocab), sizes,
-            ai, bi, band_idx, nh, rpb, min_est, thr,
-        )
-        if len(ai) == 0:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": ids[ai],
-                "id_b": ids[bi],
-                "est_jaccard": est,
-                "jaccard": jac,
-            }
-        )
-
-    # r11: pin the bucket exchange at session parallelism (the shuffle
-    # is byte-small but the stage cost is Python pair work, so AQE's
-    # byte-based coalescing under-parallelizes it). r12: the hash
-    # repartition co-locates each bucket's rows and ONE mapInPandas
-    # call per partition recovers the buckets itself — the per-group
-    # applyInPandas bookkeeping (~90k groups at sf0.1, most singleton)
-    # was the stage's dominant cost (measured ~1.5 s/task against
-    # ~0.3 s of pair math). Partition memory is bounded by the shuffle
-    # partition size (cluster knob), same as the groupBy formulation's
-    # largest-group bound plus batching.
-    par = banded.sparkSession.sparkContext.defaultParallelism
-    exch = banded.repartition(par, "band_idx", "band_key")
-    pairs = exch.mapInPandas(pairs_pass, schema=out_schema)
-    if not d_rows:
-        return pairs
-    # r12 giant-bucket decomposition (verdict item 3): the defer pass
-    # reads the SAME exchange (ReusedExchange — the corpus signature
-    # pass and its shuffle run once) and re-emits only giant buckets'
-    # payload rows, keyed (band_key, band, block_a, block_b); the
-    # block stage then gives every pair-matrix block its own task
-    # instead of one unsplittable applyInPandas group doing O(m²) work
-    # serially on a straggler core. Everything stays lazy — no eager
-    # checkpoint, no materialization of the (possibly huge) pair
-    # output, and when no bucket reaches d_rows the defer pass emits
-    # nothing and the block stage is empty.
-    deferred = exch.mapInArrow(defer_pass, schema=defer_schema)
-    giant = (
-        deferred.repartition(par, "__gk", "__band", "__ga", "__gb")
-        .groupBy("__gk", "__band", "__ga", "__gb")
-        .applyInPandas(block_verify, schema=out_schema)
-    )
-    return pairs.unionByName(giant)
+    ).select(*tag, id_col, *mh, "__sh", "band.band_idx", "band.band_key")
 
 
-def _incremental_fused(
+def _lsh_verified(
     index_df: DataFrame,
-    batch_df: DataFrame,
+    batch_df: DataFrame | None,
     text_col: str,
     id_col: str,
     num_hashes: int,
@@ -1306,60 +548,45 @@ def _incremental_fused(
     shingle_len: int,
     min_est_jaccard: float,
     threshold: float,
-    chunk_pairs: int = 1 << 20,
-    giant_rows: int | None = None,
-    giant_threads: int | None = None,
+    **kernel,
 ) -> DataFrame:
-    """Fused single-shuffle INCREMENTAL fuzzy dedup (r11): the
-    bipartite analog of :func:`_lsh_verified_fused`. Each side computes
-    (signature, shingle array) in one Arrow map pass, both explode to
-    the same band-bucket key space with a side tag, and one
-    ``applyInPandas`` per bucket enumerates ONLY index x batch pairs
-    (est filter, first-matching-band dedup) and verifies survivors
-    with the shared popcount/CSR/BLAS kernels. The staged asymmetric
-    pipeline ran two signature passes, a band join, a candidate
-    checkpoint, the candidate-id semi-join, a shingle pass +
-    checkpoint, routing actions, and the verify join — per-boundary
-    materializations whose fixed costs never amortize with scale.
-    Output identical to the staged path (parity-tested):
-    (id_a = index doc, id_b = batch doc, est_jaccard, jaccard >=
-    threshold), including self-pairs when an id appears on both sides
-    (the staged band join has no id inequality filter).
+    """The one fuzzy-dedup plan: the self-join of ``index_df`` when
+    ``batch_df`` is None (:func:`lsh_verified_pairs`), else index x
+    batch (:func:`incremental_neardup_pairs`). ``kernel`` carries
+    :func:`..functions.jaccard_verify.verify_bucket`'s test hooks to
+    the executors.
+
+    Every decision is bucket-local: two docs are a candidate iff they
+    share a band bucket, and est_jaccard, the first-matching-band rule
+    and the exact Jaccard need only the two docs' (signature, shingle
+    array) payloads. So one map pass per input emits each payload into
+    its ``bands`` buckets, ONE exchange co-locates every bucket, and ONE
+    ``mapInPandas`` call per shuffle partition recovers the buckets and
+    verifies each — no join, no candidate materialization, no
+    checkpoint. The exchange is pinned at session parallelism: its
+    bytes are small but the stage cost is Python pair work, which AQE's
+    byte-based coalescing would under-parallelize. A degenerate bucket
+    of m near-identical docs costs O(m²) vectorized compares in one
+    task.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
+    from ..functions.jaccard_verify import verify_bucket
+
     nh, rpb = num_hashes, num_hashes // bands
-    band_structs = []
-    for b in range(bands):
-        slots = [f"mh_{b * rpb + r}" for r in range(rpb)]
-        key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
-        band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
+    bipartite = batch_df is not None
 
-    def banded_side(df: DataFrame, side: int) -> DataFrame:
-        combo = _signatures_and_shingles_arrow(
-            df, text_col, id_col, num_hashes, shingle_len
-        )
-        return combo.select(
-            F.lit(side).alias("__side"),
-            F.col(id_col),
-            *[F.col(f"mh_{j}") for j in range(nh)],
-            F.col("__sh"),
-            F.explode(
-                F.expr("array(" + ", ".join(band_structs) + ")")
-            ).alias("band"),
-        ).select(
-            "__side",
-            id_col,
-            *[f"mh_{j}" for j in range(nh)],
-            "__sh",
-            "band.band_idx",
-            "band.band_key",
+    def payload(df, side=None):
+        return _banded_payload(
+            df, text_col, id_col, num_hashes, bands, shingle_len, side
         )
 
-    banded = banded_side(index_df, 0).unionByName(banded_side(batch_df, 1))
-
+    if bipartite:
+        banded = payload(index_df, side=0).unionByName(payload(batch_df, side=1))
+    else:
+        banded = payload(index_df)
     id_type = index_df.schema[id_col].dataType
     out_schema = T.StructType(
         [
@@ -1372,214 +599,53 @@ def _incremental_fused(
     min_est = float(min_est_jaccard)
     thr = float(threshold)
 
-    _none4 = (
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.float64),
-        np.zeros(0, dtype=np.float64),
-    )
-
-    def verify_bipartite(band_idx, ids, side, M8, sh_vals):
-        """Candidate enumeration + exact verification for ONE bipartite
-        bucket, given numpy inputs. Returns (id_a, id_b, est, jac)
-        arrays — called per bucket SLICE by the r12 partition pass
-        (same per-group-overhead removal as the self-join path)."""
-        empty = _none4
-        a_rows = np.flatnonzero(side == 0)
-        b_rows = np.flatnonzero(side == 1)
-        na, nb = len(a_rows), len(b_rows)
-        if na == 0 or nb == 0:
-            return empty
-        m = len(ids)
-        arrs = [np.asarray(a, dtype=np.int64) for a in sh_vals]
-        lens = np.fromiter((len(a) for a in arrs), np.int64, m)
-        flat = np.concatenate(arrs)
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-
-        # in-task chunk pool for giant bipartite buckets (r11
-        # continuation) — chunks are independent; identical arithmetic,
-        # lock-guarded Mf32/delta lazies (see the self-join bucket)
-        import threading
-
-        state = {"Mf32": None, "delta": None}
-        state_lock = threading.Lock()
-
-        def get_delta(nv):
-            with state_lock:
-                if state["delta"] is None:
-                    state["delta"] = _delta_csr(indptr, indices, nv)
-                return state["delta"]
-
-        def get_Mf32(nv):
-            with state_lock:
-                if state["Mf32"] is None:
-                    Mf32 = np.zeros((m, nv), dtype=np.float32)
-                    rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-                    Mf32[rws, indices] = 1.0
-                    state["Mf32"] = Mf32
-                return state["Mf32"]
-
-        rows_per_chunk = max(1, chunk_pairs // nb)
-
-        def do_chunk(r0):
-            r1 = min(r0 + rows_per_chunk, na)
-            # bipartite chunk: every (index row in [r0,r1)) x batch
-            # row, tracked as POSITIONS (pa, pb) into a_rows/b_rows so
-            # the BLAS panel can be indexed directly after filtering
-            pa = np.repeat(np.arange(r0, r1, dtype=np.int64), nb)
-            pb = np.tile(np.arange(nb, dtype=np.int64), r1 - r0)
-            ai, bi = a_rows[pa], b_rows[pb]
-            # row-gather once, one vectorized compare (see the
-            # self-join bucket: ~4x fewer fancy-index passes)
-            eq = M8[ai] == M8[bi]
-            est = eq.sum(axis=1) / float(nh)
-            keep = est >= min_est
-            for b in range(band_idx):
-                keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
-            pa, pb, est = pa[keep], pb[keep], est[keep]
-            ai, bi = ai[keep], bi[keep]
-            if len(ai) == 0:
-                return None
-            nv = len(vocab)
-            # four-way kernel choice — see the self-join bucket for the
-            # measured cost laws; the delta kernel wins on
-            # near-duplicate families (work = edit deltas, still exact)
-            csize, Mip, Mix, Pip, Pix = get_delta(nv)
-            dlens = (Mip[1:] - Mip[:-1]) + (Pip[1:] - Pip[:-1])
-            delta_cost = (
-                13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
-                if csize
-                else float("inf")
-            )
-            blas_cost = (r1 - r0) * nb * nv * 0.04
-            csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-            pop_cost = 2.2 * len(ai) * nv
-            budget_ok = m * nv * 4 <= (256 << 20)
-            if delta_cost < min(blas_cost, csr_cost, pop_cost):
-                inter = _intersect_counts_delta(
-                    csize, Mip, Mix, Pip, Pix, ai, bi
-                ).astype(np.float64)
-            elif budget_ok and blas_cost < min(csr_cost, pop_cost):
-                Mf32 = get_Mf32(nv)
-                # dense duplicate-family bucket: the whole index-chunk
-                # x batch intersection panel in one sgemm (counts
-                # < 2^24, exact in float32)
-                panel = Mf32[a_rows[r0:r1]] @ Mf32[b_rows].T
-                inter = panel[pa - r0, pb].astype(np.int64).astype(
-                    np.float64
-                )
-            elif pop_cost < csr_cost and m * nv <= (256 << 20):
-                inter = _intersect_counts_popcount(
-                    indptr, indices, nv, ai, bi
-                ).astype(np.float64)
-            else:
-                inter = _intersect_counts_csr(
-                    indptr, indices, ai, bi
-                ).astype(np.float64)
-            jac = inter / (sizes[ai] + sizes[bi] - inter)
-            keep2 = jac >= thr
-            if not keep2.any():
-                return None
-            return (
-                ids[ai[keep2]],
-                ids[bi[keep2]],
-                est[keep2],
-                jac[keep2],
-            )
-
-        g_rows = _GIANT_BUCKET_ROWS if giant_rows is None else giant_rows
-        starts = list(range(0, na, rows_per_chunk))
-        if m < g_rows:
-            cthreads = 1
-        elif giant_threads is not None:
-            cthreads = max(1, giant_threads)
-        else:
-            cthreads = _bucket_thread_count(m, chunk_pairs * 40)
-        cthreads = min(cthreads, max(len(starts), 1))
-        if cthreads > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(cthreads) as pool:
-                frames = [
-                    f for f in pool.map(do_chunk, starts) if f is not None
-                ]
-        else:
-            frames = [f for f in map(do_chunk, starts) if f is not None]
-        if not frames:
-            return empty
-        return tuple(
-            np.concatenate([f[c] for f in frames]) for c in range(4)
-        )
-
-    def partition_verify(batches):
-        """ONE call per shuffle partition (mapInPandas) — the r12
-        per-group-overhead removal, bipartite form. The hash
-        repartition on (band_idx, band_key) co-locates each bucket's
-        rows (both sides); one concat + one lexsort recovers buckets
-        as contiguous numpy slices."""
-        frames = [f for f in batches]
+    def partition_pass(batches):
+        """The hash repartition on (band_idx, band_key) co-locates each
+        bucket's rows, so one concat + one lexsort makes every bucket a
+        contiguous, id-sorted slice (measured at sf0.1: a pandas frame
+        per bucket cost ~1.5 s/task over ~90k mostly-singleton buckets
+        against ~0.3 s of pair math)."""
+        frames = list(batches)
         if not frames:
             return
-        pdf = (
-            pd.concat(frames, ignore_index=True)
-            if len(frames) > 1
-            else frames[0]
-        )
+        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
         if len(pdf) == 0:
             return
-        bi_all = pdf["band_idx"].to_numpy()
-        bk_all = pdf["band_key"].to_numpy()
-        order = np.lexsort((bk_all, bi_all))
-        bi_all = bi_all[order]
-        bk_all = bk_all[order]
-        ids_all = pdf[id_col].to_numpy()[order]
-        side_all = pdf["__side"].to_numpy()[order]
-        M8_all = np.column_stack(
-            [pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)]
+        band = pdf["band_idx"].to_numpy()
+        key = pdf["band_key"].to_numpy()
+        ids = pdf[id_col].to_numpy()
+        order = np.lexsort((ids, key, band))
+        band, key, ids = band[order], key[order], ids[order]
+        M8 = np.column_stack([pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)])
+        sh = pdf["__sh"].to_numpy()[order]
+        side = pdf["__side"].to_numpy()[order] if bipartite else None
+        starts = np.flatnonzero(
+            np.concatenate(([True], (band[1:] != band[:-1]) | (key[1:] != key[:-1])))
         )
-        sh_all = pdf["__sh"].to_numpy()[order]
-        n = len(ids_all)
-        newgrp = np.concatenate(
-            ([True], (bi_all[1:] != bi_all[:-1]) | (bk_all[1:] != bk_all[:-1]))
-        )
-        starts = np.flatnonzero(newgrp)
-        bounds = np.concatenate((starts, [n]))
+        bounds = np.concatenate((starts, [len(ids)])).tolist()
         res = []
-        for k in range(len(starts)):
-            lo, hi = int(bounds[k]), int(bounds[k + 1])
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
             if hi - lo < 2:
                 continue
-            out = verify_bipartite(
-                int(bi_all[lo]),
-                ids_all[lo:hi],
-                side_all[lo:hi],
-                M8_all[lo:hi],
-                sh_all[lo:hi],
+            out = verify_bucket(
+                int(band[lo]), ids[lo:hi], M8[lo:hi], sh[lo:hi],
+                nh, rpb, min_est, thr,
+                side=None if side is None else side[lo:hi],
+                **kernel,
             )
             if len(out[0]):
                 res.append(out)
         if res:
             yield pd.DataFrame(
                 {
-                    "id_a": np.concatenate([r[0] for r in res]),
-                    "id_b": np.concatenate([r[1] for r in res]),
-                    "est_jaccard": np.concatenate([r[2] for r in res]),
-                    "jaccard": np.concatenate([r[3] for r in res]),
+                    c: np.concatenate([r[i] for r in res])
+                    for i, c in enumerate(out_schema.names)
                 }
             )
 
-    # r11: pin the bucket exchange at session parallelism (byte-based
-    # AQE coalescing under-parallelizes the Python pair work). r12:
-    # one mapInPandas call per partition instead of one applyInPandas
-    # group per bucket — see the self-join path for the measured
-    # per-group-overhead rationale.
     par = banded.sparkSession.sparkContext.defaultParallelism
     return banded.repartition(par, "band_idx", "band_key").mapInPandas(
-        partition_verify, schema=out_schema
+        partition_pass, schema=out_schema
     )
 
 
@@ -1592,587 +658,35 @@ def lsh_verified_pairs(
     shingle_len: int = 5,
     min_est_jaccard: float = 0.25,
     threshold: float = 0.3,
-    verify_broadcast_docs: int = 1_000_000,
-    verify_broadcast_bytes: int = 256 << 20,
-    verify_block_docs: int = 4096,
-    strategy: str = "fused",
-    verify_blocked_min_pairs: int = 65536,
 ) -> DataFrame:
-    """The canonical two-stage fuzzy dedup at scale: MinHash+LSH proposes
-    candidate pairs (sub-quadratic), exact n-gram Jaccard verifies ONLY
-    those pairs (E1 end-to-end).
+    """Two-stage fuzzy dedup at scale (E1 end-to-end): MinHash+LSH
+    proposes candidate pairs (sub-quadratic), exact n-gram Jaccard
+    verifies ONLY those pairs.
 
-    Verify-stage plan shape (round-2 rework, measured 7x at sf0.1 on a
-    template-heavy corpus producing 2.4M candidates; round-3 additions
-    marked):
+    A pair is a candidate when the two documents share a band bucket
+    (the banding of :func:`lsh_candidate_pairs`) and its
+    ``est_jaccard`` — agreeing signature slots / ``num_hashes`` —
+    reaches ``min_est_jaccard``; it is verified when its exact Jaccard
+    over the hashed shingle sets (:func:`hashed_shingle_expr`),
+    ``|A∩B| / (|A| + |B| - |A∩B|)`` in float64, reaches ``threshold``.
 
-    * Shingle-set hashing (one md5 per shingle occurrence — the
-      expensive projection) runs only on documents that appear in a
-      candidate pair (semi-join), never corpus-wide, and the hashed
-      frame is MATERIALIZED ONCE (``localCheckpoint``) because it feeds
-      both sides of the verify join (r3: previously recomputed per side).
-    * The candidate pair list is materialized via ``localCheckpoint``
-      (eager) — it has two consumers (the candidate-doc id set and the
-      verify join) and recomputing it means rerunning the whole
-      MinHash+band pipeline. Checkpointing (not ``persist``) means no
-      cached-block handle leaks to the caller: blocks are freed when the
-      RDD is garbage-collected, and the returned plan is a scan.
-    * A SIZE-RATIO PRUNE runs before the intersection (r3):
-      ``|A∩B| <= min(|A|,|B|)`` and ``|A∪B| >= max(|A|,|B|)``, so
-      ``j <= min/max`` — pairs failing ``min/max >= threshold`` cannot
-      reach the threshold and skip the expensive ``array_intersect``.
-      Semantics-preserving.
-    * Broadcast decision (r3: byte-based, not doc-count-based; r9:
-      BYTES are the primary gate): both shingle sides broadcast when
-      the measured total shingle payload (``sum(size(__sh)) * 8``
-      bytes, an exact driver scalar off the checkpointed frame) fits
-      ``verify_broadcast_bytes`` AND the doc count fits
-      ``verify_broadcast_docs`` — the count is only a backstop against
-      degenerate many-tiny-docs maps whose per-entry JVM hashmap
-      overhead the payload bytes do not capture (~100 B/entry; the 1M
-      default bounds that at ~100 MB). r9 measurement: the old 100K
-      doc backstop mis-routed the 30x-decade corpus (150K docs but
-      only 245 MB payload) onto the blocked path, whose cogroup
-      DEGENERATES when the pair graph touches most docs — every block
-      re-ships and re-preps nearly the whole corpus (measured 28.2M of
-      30.6M shingles PER BLOCK, 17 blocks), 304 s vs the broadcast
-      path's 131 s on identical output. Broadcasting means the pair
-      list never shuffles its array payloads — the shuffle formulation
-      moves |pairs| x shingle-array bytes twice AND is skew-prone
-      (duplicate families share hot ids).
-    * Beyond the broadcast gate the verify routes through a BLOCKED
-      MATMUL (r3, :func:`_verify_pairs_blocked`): pairs hash into
-      blocks of ~``verify_block_docs`` docs, each block ships its doc
-      shingle sets once and verifies all its pairs with one vectorized
-      intersection per pair chunk — instead of a shuffled
-      array-payload join whose hot ids skew.
+    Output: (id_a, id_b, est_jaccard, jaccard) with id_a < id_b, one row
+    per verified pair.
 
-    Output: (id_a, id_b, est_jaccard, jaccard) with jaccard >= threshold.
-
-    r11: ``strategy`` picks the physical plan, identical output either
-    way (parity-tested at three policy points):
-
-    * ``'fused'`` (default): :func:`_lsh_verified_fused` — signatures +
-      shingle arrays in ONE map pass, band explode, candidate
-      generation AND exact verification inside each LSH bucket. One
-      exchange total (~bands x corpus payload), no candidate
-      materialization, no checkpoints, no routing actions — the staged
-      plan's ~13 Spark jobs collapse to 1 (measured 9.5 s -> ~2.5 s at
-      sf0.1; the per-job fixed costs it deletes do not amortize with
-      scale, and the shuffle it keeps is the smaller one).
-    * ``'staged'``: the r3-r10 pipeline below — band self-join for
-      candidates, then broadcast/blocked verification under the
-      byte + pair-count gates. Kept for the asymmetric incremental
-      path (:func:`incremental_neardup_pairs` shares its tail) and as
-      the parity reference.
+    Plan (:func:`_lsh_verified`): signatures and shingle arrays in ONE
+    map pass, one exchange on the band bucket, candidate generation and
+    verification inside each bucket — no join, no checkpoint.
     """
-    if strategy == "fused":
-        return _lsh_verified_fused(
-            df,
-            text_col,
-            id_col,
-            num_hashes,
-            bands,
-            shingle_len,
-            min_est_jaccard,
-            threshold,
-        )
-    if strategy != "staged":
-        raise ValueError(
-            f"strategy must be 'fused' or 'staged', got {strategy!r}"
-        )
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_len)
-    cands = lsh_candidate_pairs(
-        sigs, id_col, num_hashes, bands, min_est_jaccard
-    ).localCheckpoint(eager=True)
-    return _verify_candidate_pairs(
+    return _lsh_verified(
         df,
-        cands,
+        None,
         text_col,
         id_col,
+        num_hashes,
+        bands,
         shingle_len,
+        min_est_jaccard,
         threshold,
-        verify_broadcast_docs,
-        verify_broadcast_bytes,
-        verify_block_docs,
-        verify_blocked_min_pairs,
-    )
-
-
-def _verify_candidate_pairs(
-    df: DataFrame,
-    cands: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_len: int,
-    threshold: float,
-    verify_broadcast_docs: int,
-    verify_broadcast_bytes: int,
-    verify_block_docs: int,
-    verify_blocked_min_pairs: int = 65536,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (the shared tail of
-    :func:`lsh_verified_pairs` and :func:`incremental_neardup_pairs`):
-    shingle only candidate docs, size-ratio prune, broadcast verify
-    under the byte gate, blocked CSR-kernel verify beyond it. ``cands``
-    must be materialized (it is consumed twice) and carry
-    (id_a, id_b, est_jaccard); ``df`` must cover every id in ``cands``.
-
-    r11 routing addition: the verify strategy is a COST decision, not
-    just a fits-in-memory decision. The broadcast join pays one JVM
-    ``array_intersect`` hash-set build per pair — measured ~6 us/pair
-    at sf0.1 (2.4 M template-heavy candidates -> 14.6 s, twice
-    evaluated inside the pushed join condition) — while the blocked CSR
-    kernel answers the same pairs at ~0.25 us/pair plus one bounded
-    payload shuffle. So beyond ``verify_blocked_min_pairs`` candidates
-    the blocked path wins REGARDLESS of whether the shingle payload
-    would fit a broadcast, and the gate routes there; below it the
-    broadcast join's all-JVM plan (no Python workers, no cogroup
-    shuffle) stays cheaper. Both paths are bit-identical
-    (parity-tested).
-    """
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # Repartition BEFORE the shingle projection: the semi-join output is
-    # tiny by row count, so AQE coalesces it to ~1 partition — which
-    # serializes the expensive per-position md5 work. Spreading the few
-    # thousand (id, text) rows across the cluster costs one trivial
-    # shuffle and parallelizes the hashing (measured ~3s -> ~0.5s wall
-    # on the sf0.1 verify stage).
-    par = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        _hashed_shingles_arrow(
-            df.join(cand_ids, id_col, "left_semi").repartition(
-                par, F.col(id_col)
-            ),
-            text_col,
-            id_col,
-            shingle_len,
-        )
-        .localCheckpoint(eager=True)
-    )
-    # Both stats in one bounded action off the checkpointed frame.
-    stats = sh.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.coalesce(F.sum(F.size("__sh")), F.lit(0)).alias("__tot"),
-    ).first()
-    n_cand_docs, est_bytes = stats["__n"], int(stats["__tot"]) * 8
-    n_pairs = cands.count()  # bounded action on the checkpointed frame
-    if (
-        n_cand_docs > verify_broadcast_docs
-        or est_bytes > verify_broadcast_bytes
-        or n_pairs >= verify_blocked_min_pairs
-    ):
-        verified = _verify_pairs_blocked(
-            cands,
-            sh,
-            id_col,
-            block_docs=verify_block_docs,
-            n_pairs=n_pairs,
-            threshold=threshold,
-        )
-        return verified.where(F.col("jaccard") >= threshold)
-    a = F.broadcast(
-        sh.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
-    )
-    b = F.broadcast(
-        sh.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
-    )
-    ratio_ok = (
-        F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
-        / F.greatest(F.size("sh_a"), F.size("sh_b")).cast("double")
-        >= F.lit(threshold)
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .where(ratio_ok)
-        .select(
-            "id_a",
-            "id_b",
-            "est_jaccard",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def _intersect_counts_csr(
-    indptr, indices, ai, bi
-):
-    """Exact set-intersection counts for a pair list over a CSR-encoded
-    family of distinct-element sets (r11 optimization round: the blocked
-    verify's per-pair kernel, fully vectorized).
-
-    ``indptr``/``indices`` encode each doc's distinct shingle ids (as
-    indices into a block vocabulary); ``ai``/``bi`` are row indices of
-    the pairs. Strategy: group the pairs by ``ai`` (one argsort), and
-    per distinct left doc set a boolean vocab mask of its elements, then
-    answer ALL of its partners with one fancy-index gather + one prefix
-    sum — O(total partner set sizes) numpy work with no per-pair Python.
-    Replaces the r9 kernels (dense per-pair ``einsum`` — O(pairs x
-    vocab); per-pair ``searchsorted`` loop — ~10 us of Python per pair):
-    measured 14.6 s -> 0.6 s on the sf0.1 verify stage (2.4 M pairs,
-    ~100 K vocab), identical counts.
-    """
-    import numpy as np
-
-    inter = np.zeros(len(ai), dtype=np.int64)
-    if len(ai) == 0 or len(indices) == 0:
-        return inter
-    order = np.argsort(ai, kind="stable")
-    ai_s, bi_s = ai[order], bi[order]
-    run_starts = np.flatnonzero(
-        np.concatenate(([True], ai_s[1:] != ai_s[:-1]))
-    )
-    run_bounds = np.concatenate((run_starts, [len(ai_s)]))
-    nvocab = int(indices.max()) + 1 if len(indices) else 0
-    mask = np.zeros(nvocab, dtype=bool)
-    lens_all = indptr[1:] - indptr[:-1]
-    for r in range(len(run_starts)):
-        r0, r1 = run_bounds[r], run_bounds[r + 1]
-        a = ai_s[r0]
-        ia = indices[indptr[a] : indptr[a + 1]]
-        mask[ia] = True
-        b_run = bi_s[r0:r1]
-        starts = indptr[b_run]
-        lengths = lens_all[b_run]
-        total = int(lengths.sum())
-        if total:
-            # flat CSR index of every partner element (ranges -> flat):
-            # element j of partner p sits at indices[starts[p] + j]
-            ends = np.cumsum(lengths)
-            offs = np.concatenate(([0], ends[:-1]))
-            within = np.arange(total) - np.repeat(offs, lengths)
-            flat = np.repeat(starts, lengths) + within
-            hits = mask[indices[flat]]
-            # per-partner hit counts via prefix sum (handles empty
-            # partner sets exactly, unlike reduceat)
-            cum = np.concatenate(([0], np.cumsum(hits)))
-            inter[order[r0:r1]] = cum[ends] - cum[offs]
-        mask[ia] = False
-    return inter
-
-
-def _intersect_counts_popcount(
-    indptr, indices, nvocab, ai, bi, chunk_pairs: int = 262_144
-):
-    """Exact set-intersection counts via packed bitsets + popcount —
-    the small-vocabulary fast path of the blocked verify (r11).
-
-    Each doc's set becomes a ``ceil(nvocab/8)``-byte bitset row;
-    per pair the count is ``popcount(row_a & row_b)``, evaluated for
-    ``chunk_pairs`` pairs at a time as three vectorized uint8 passes
-    (gather, AND, LUT-popcount + row sum). Cost is
-    O(pairs x nvocab/8) with a tiny constant — on template-heavy
-    corpora the block vocabulary is small (2,041 distinct shingles at
-    sf0.1) so this beats the CSR kernel's O(pairs x avg_set) passes by
-    ~10x; the caller picks per block by comparing the two estimated
-    traffic volumes.
-    """
-    import numpy as np
-
-    inter = np.zeros(len(ai), dtype=np.int64)
-    if len(ai) == 0 or nvocab == 0:
-        return inter
-    n_rows = len(indptr) - 1
-    dense = np.zeros((n_rows, nvocab), dtype=bool)
-    rows = np.repeat(
-        np.arange(n_rows, dtype=np.int64), indptr[1:] - indptr[:-1]
-    )
-    dense[rows, indices] = True
-    packed = np.packbits(dense, axis=1)
-    del dense
-    pop = getattr(np, "bitwise_count", None)
-    if pop is None:  # numpy < 2.0: 256-entry LUT gather
-        lut = np.array(
-            [bin(v).count("1") for v in range(256)], dtype=np.uint8
-        )
-    for c0 in range(0, len(ai), chunk_pairs):
-        c1 = min(c0 + chunk_pairs, len(ai))
-        anded = packed[ai[c0:c1]] & packed[bi[c0:c1]]
-        counts = pop(anded) if pop is not None else lut[anded]
-        inter[c0:c1] = counts.sum(axis=1, dtype=np.int64)
-    return inter
-
-
-def _delta_csr(indptr, indices, nvocab):
-    """Decompose a CSR set family against its majority CORE (r11): the
-    elements present in more than half the rows. Returns
-    ``(core_size, M_indptr, M_indices, P_indptr, P_indices)`` where row
-    i's set A_i = (core \\ M_i) ∪ P_i — M_i the core elements the row
-    is MISSING, P_i its extras. On a near-duplicate family both deltas
-    are tiny, which is what makes the delta intersection kernel linear
-    in actual differences instead of set sizes."""
-    import numpy as np
-
-    n_rows = len(indptr) - 1
-    df_counts = np.bincount(indices, minlength=nvocab)
-    core_mask = df_counts > (n_rows >> 1)
-    core_size = int(core_mask.sum())
-    rows = np.repeat(
-        np.arange(n_rows, dtype=np.int64), indptr[1:] - indptr[:-1]
-    )
-    in_core = core_mask[indices]
-    # extras: original order within row preserved (CSR is row-major)
-    P_indices = indices[~in_core]
-    P_indptr = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(np.bincount(rows[~in_core], minlength=n_rows), out=P_indptr[1:])
-    # missing-core: dense (rows x core) presence, absent cells -> M
-    core_col = np.cumsum(core_mask, dtype=np.int64) - 1  # vocab -> core idx
-    D = np.zeros((n_rows, core_size), dtype=bool)
-    if core_size:
-        D[rows[in_core], core_col[indices[in_core]]] = True
-    m_rows, m_cols = np.nonzero(~D)  # sorted by row: CSR order
-    M_indices = m_cols.astype(np.int64)
-    M_indptr = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(np.bincount(m_rows, minlength=n_rows), out=M_indptr[1:])
-    return core_size, M_indptr, M_indices, P_indptr, P_indices
-
-
-def _intersect_counts_delta(
-    core_size, M_indptr, M_indices, P_indptr, P_indices, ai, bi
-):
-    """Exact set-intersection counts over a :func:`_delta_csr`
-    decomposition: ``|A∩B| = |C| - |Ma| - |Mb| + |Ma∩Mb| + |Pa∩Pb|``
-    (set identity: C∩A∩B = C minus the union of the two missing-sets,
-    inclusion-exclusion on Ma, Mb; (A∩B)\\C = Pa∩Pb). Work is
-    O(pairs x delta sizes) — on a near-duplicate family deltas are
-    ~10-30 elements vs ~300-element sets, an order of magnitude under
-    the popcount/BLAS kernels, and still exact integers."""
-    import numpy as np
-
-    m_len = M_indptr[1:] - M_indptr[:-1]
-    inter = (
-        core_size
-        - m_len[ai]
-        - m_len[bi]
-        + _intersect_counts_csr(M_indptr, M_indices, ai, bi)
-        + _intersect_counts_csr(P_indptr, P_indices, ai, bi)
-    )
-    return inter.astype(np.int64)
-
-
-def _verify_block_pairs(
-    M8, lens, indptr, indices, nvocab, sizes, ai, bi, band_idx, nh, rpb,
-    min_est, thr,
-):
-    """Est-filter + first-matching-band dedup + exact Jaccard for an
-    EXPLICIT candidate index list — the per-group kernel of the r12
-    giant-bucket block-verify stage (verdict item 3). Identical
-    arithmetic to the fused bucket paths: est = agreeing slots / nh in
-    float64, drop if any earlier band fully agrees, intersection counts
-    are exact integers from the shared delta/popcount/CSR kernels,
-    jaccard = inter / (|A| + |B| - inter) in float64. Returns the
-    filtered ``(ai, bi, est, jac)`` arrays."""
-    import numpy as np
-
-    eq = M8[ai] == M8[bi]
-    est = eq.sum(axis=1) / float(nh)
-    keep = est >= min_est
-    for b in range(band_idx):
-        keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
-    ai, bi, est = ai[keep], bi[keep], est[keep]
-    if len(ai) == 0:
-        return ai, bi, est, np.zeros(0, dtype=np.float64)
-    # kernel choice by the measured cost laws of the chunked path
-    # (blocks are <= ~1k rows, so the BLAS panel option is skipped —
-    # all remaining kernels are exact, so the choice is speed-only)
-    csize, Mip, Mix, Pip, Pix = _delta_csr(indptr, indices, nvocab)
-    dlens = (Mip[1:] - Mip[:-1]) + (Pip[1:] - Pip[:-1])
-    delta_cost = (
-        13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
-        if csize
-        else float("inf")
-    )
-    csr_cost = 13.0 * int(lens[bi].sum())
-    pop_cost = 2.2 * len(ai) * nvocab
-    n_rows = len(indptr) - 1
-    if delta_cost < min(csr_cost, pop_cost):
-        inter = _intersect_counts_delta(
-            csize, Mip, Mix, Pip, Pix, ai, bi
-        ).astype(np.float64)
-    elif pop_cost < csr_cost and n_rows * nvocab <= (256 << 20):
-        inter = _intersect_counts_popcount(
-            indptr, indices, nvocab, ai, bi
-        ).astype(np.float64)
-    else:
-        inter = _intersect_counts_csr(indptr, indices, ai, bi).astype(
-            np.float64
-        )
-    jac = inter / (sizes[ai] + sizes[bi] - inter)
-    keep2 = jac >= thr
-    return ai[keep2], bi[keep2], est[keep2], jac[keep2]
-
-
-def _verify_pairs_blocked(
-    cands: DataFrame,
-    sh: DataFrame,
-    id_col: str,
-    block_docs: int = 4096,
-    pairs_per_block: int = 250_000,
-    n_pairs: int | None = None,
-    threshold: float | None = None,
-) -> DataFrame:
-    """Verify candidate pairs by blocked vectorized intersection — the
-    high-pair-volume / beyond-broadcast path of
-    :func:`lsh_verified_pairs`.
-
-    ``threshold``: when given, the jaccard filter is applied INSIDE the
-    Python kernel so only survivors cross the Arrow boundary back to
-    the JVM (without it the full unthresholded pair list is returned —
-    the contract the parity tests exercise).
-
-    Pairs hash into blocks by ``xxhash64(id_a)``; each block's required
-    doc shingle sets (both pair sides) are gathered once per block a doc
-    appears in, and a cogrouped ``applyInPandas`` task CSR-encodes the
-    block's sets against a block vocabulary and answers every pair with
-    the mask-gather-prefix-sum kernel (:func:`_intersect_counts_csr`) —
-    O(total pair set sizes) numpy work, no per-pair Python and no dense
-    doc x vocab structure at any scale (the r9 dense einsum was
-    O(pairs x vocab) and its fallback ~10 us of Python per pair; r11
-    measurement at sf0.1: 2.4 M-pair verify 14.6 s -> 0.6 s, identical
-    output).
-
-    Versus the shuffled array-payload join this replaces: the shuffle
-    key is a small block int (AQE-splittable), each doc's shingle array
-    moves once per block (bounded by its pair fan-out, not duplicated
-    per pair), and hot duplicate-family ids no longer concentrate on
-    one join task. Same intersection-count exactness argument as
-    :func:`blocked_jaccard_pairs` (int counts, float64 division).
-
-    Output: (id_a, id_b, est_jaccard, jaccard) — UNTHRESHOLDED; the
-    caller applies its jaccard filter.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    n_docs = sh.count()  # checkpointed upstream: a cheap bounded scan
-    # Block count balances two linear costs (r9, re-derived r11 for the
-    # vectorized kernel): each block is ONE cogroup task (python-kernel
-    # parallelism = num_blocks), but a doc's shingle payload ships once
-    # per block it is paired into — duplicate-family docs pair into
-    # nearly every block (measured fan-out 30.3 of 37 blocks at 30x),
-    # so payload shuffle bytes grow ~linearly with num_blocks. With the
-    # r9 einsum kernel (~30 s per 3M-pair task) blocks were capped hard
-    # to amortize the kernel; the r11 CSR kernel does ~250 K pairs in
-    # well under a second, so blocks now target ~pairs_per_block pairs
-    # for parallelism, still capped by the doc-count rule so shipping
-    # duplication never exceeds the r9-audited ceiling.
-    if n_pairs is None:
-        n_pairs = cands.count()  # checkpointed upstream: cheap
-    par = max(1, cands.sparkSession.sparkContext.defaultParallelism)
-    num_blocks = max(1, -(-n_docs // block_docs), min(par, n_docs))
-    num_blocks = min(num_blocks, max(1, -(-n_pairs // pairs_per_block)))
-    pairs_b = cands.withColumn(
-        "__blk", F.pmod(F.xxhash64("id_a"), F.lit(num_blocks)).cast("int")
-    )
-    # Distinct alias (__dblk) on the doc side: it derives from pairs_b,
-    # and cogrouping two frames that share the __blk lineage is an
-    # ambiguous self-join to the analyzer. Cogroup keys align by
-    # position, not name.
-    need = (
-        pairs_b.select(F.col("__blk").alias("__dblk"), F.col("id_a").alias("__id"))
-        .union(pairs_b.select(F.col("__blk").alias("__dblk"), F.col("id_b").alias("__id")))
-        .distinct()
-    )
-    doc_sh = need.join(
-        sh, need["__id"] == sh[id_col]
-    ).select("__dblk", "__id", "__sh")
-
-    id_type = cands.schema["id_a"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("est_jaccard", T.DoubleType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-
-    def verify_block(pairs_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="object"),
-                "id_b": pd.Series(dtype="object"),
-                "est_jaccard": pd.Series(dtype="float64"),
-                "jaccard": pd.Series(dtype="float64"),
-            }
-        )
-        if len(pairs_pdf) == 0 or len(docs_pdf) == 0:
-            return empty
-        # CSR-encode the block's shingle sets against a block
-        # vocabulary: the upstream arrays are already per-doc distinct
-        # (array_distinct of the gram STRINGS, then hashed — the same
-        # payload the broadcast join's size()/array_intersect sees), so
-        # the only work is one np.unique(return_inverse) over the
-        # concatenated block payload. Set sizes are the raw array
-        # lengths — identical to the broadcast path's size(__sh).
-        n_rows = len(docs_pdf)
-        row_of: dict = {
-            did: r for r, did in enumerate(docs_pdf["__id"])
-        }
-        arrs = [
-            np.asarray(a, dtype=np.int64) for a in docs_pdf["__sh"]
-        ]
-        lens = np.fromiter((len(a) for a in arrs), np.int64, n_rows)
-        flat = (
-            np.concatenate(arrs) if n_rows else np.empty(0, np.int64)
-        )
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(n_rows + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-        ai = pairs_pdf["id_a"].map(row_of).to_numpy(dtype=np.int64)
-        bi = pairs_pdf["id_b"].map(row_of).to_numpy(dtype=np.int64)
-        # Kernel choice from the two measured cost laws (both exact,
-        # both vectorized; constants measured at sf0.1, r11): the CSR
-        # mask kernel costs ~13 ns per partner ELEMENT, the packed-
-        # bitset popcount kernel ~2.2 ns per pair VOCABULARY BIT — so
-        # popcount wins only when the block vocabulary is smaller than
-        # ~6x the average set size (hyper-templated blocks). The bitset
-        # build is additionally bounded so a diverse-vocabulary block
-        # (vocab grows with corpus diversity at the 30x decade) never
-        # allocates an oversized dense bool matrix.
-        total_partner = int(lens[bi].sum()) if len(bi) else 0
-        pop_cost = 2.2 * len(ai) * len(vocab)
-        csr_cost = 13.0 * total_partner
-        if pop_cost < csr_cost and n_rows * len(vocab) <= (256 << 20):
-            inter = _intersect_counts_popcount(
-                indptr, indices, len(vocab), ai, bi
-            ).astype(np.float64)
-        else:
-            inter = _intersect_counts_csr(
-                indptr, indices, ai, bi
-            ).astype(np.float64)
-        jac = inter / (sizes[ai] + sizes[bi] - inter)
-        out = pd.DataFrame(
-            {
-                "id_a": pairs_pdf["id_a"].to_numpy(),
-                "id_b": pairs_pdf["id_b"].to_numpy(),
-                "est_jaccard": pairs_pdf["est_jaccard"].to_numpy(dtype=np.float64),
-                "jaccard": jac,
-            }
-        )
-        if threshold is not None:
-            # kernel-side thresholding: survivors are typically a tiny
-            # fraction of candidates (617 of 2.4M at sf0.1), so filter
-            # BEFORE the Arrow return instead of shipping every pair
-            # back to the JVM for the same comparison
-            out = out[out["jaccard"] >= threshold]
-        return out
-
-    return (
-        pairs_b.groupBy("__blk")
-        .cogroup(doc_sh.groupBy("__dblk"))
-        .applyInPandas(verify_block, schema=out_schema)
     )
 
 
@@ -2573,31 +1087,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return spread_to_parallelism(df)
 
 
-def _banded(
-    signatures: DataFrame, id_col: str, side: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """Explode a MinHash signature frame into (id, mh slots, band_idx,
-    band_key) rows with side-prefixed column names — the join input for
-    asymmetric LSH banding. Identical banding to
-    :func:`lsh_candidate_pairs` (md5 over the band's slots)."""
-    rows_per_band = num_hashes // bands
-    band_structs = []
-    for b in range(bands):
-        slots = [f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]
-        key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
-        band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
-    return signatures.select(
-        F.col(id_col).alias(f"id_{side}"),
-        *[F.col(f"mh_{k}").alias(f"{side}_{k}") for k in range(num_hashes)],
-        F.explode(F.expr("array(" + ", ".join(band_structs) + ")")).alias("band"),
-    ).select(
-        f"id_{side}",
-        *[f"{side}_{k}" for k in range(num_hashes)],
-        "band.band_idx",
-        "band.band_key",
-    )
-
-
 def incremental_neardup_pairs(
     index_df: DataFrame,
     batch_df: DataFrame,
@@ -2608,112 +1097,34 @@ def incremental_neardup_pairs(
     shingle_len: int = 5,
     min_est_jaccard: float = 0.25,
     threshold: float = 0.3,
-    verify_broadcast_docs: int = 1_000_000,
-    verify_broadcast_bytes: int = 256 << 20,
-    verify_block_docs: int = 4096,
-    strategy: str = "fused",
 ) -> DataFrame:
     """Incremental fuzzy dedup of a NEW BATCH against an already-ingested
     corpus — the production shape of continuous dataset building: the
     historical corpus is not re-deduplicated against itself on every
-    ingest; only index x batch candidate pairs are generated and
-    verified. Ids must be disjoint across the two frames (same id space,
-    new ids for new docs).
+    ingest; only index x batch pairs are generated and verified. Ids
+    should be disjoint across the two frames (same id space, new ids
+    for new docs); an id present on both sides pairs with itself.
 
-    Plan shape, sized for a 100 TB index + small daily batch:
-
-    * Signatures are computed per side with the map-only Arrow MinHash
-      (in production the INDEX side would be a persisted signature
-      table — the plan from ``minhash_signatures`` on, which this
-      function takes as its contract, is identical).
-    * The band join is ASYMMETRIC: index bands x batch bands on
-      (band_idx, band_key). The shuffle is bounded by bands x rows, and
-      with a small batch the batch side broadcasts (AQE decides) — the
-      index never self-joins, which is what makes re-ingest linear in
-      batch size instead of quadratic-ish in corpus size.
-    * First-matching-band dedup and the est-Jaccard floor are the same
-      as :func:`lsh_candidate_pairs`; verification (size-ratio prune,
-      byte-gated broadcast, blocked-matmul fallback) is the shared
-      :func:`_verify_candidate_pairs` tail, shingling ONLY candidate
-      docs from either side.
+    Same candidate rule, arithmetic and plan as
+    :func:`lsh_verified_pairs` (see :func:`_lsh_verified`), with each
+    side's payload tagged and every bucket verifying only its
+    index x batch pairs: the index is never paired with itself (its
+    payload still crosses the one exchange on every call).
 
     Output: (id_a = index doc, id_b = batch doc, est_jaccard, jaccard)
     with jaccard >= ``threshold`` — feed to an anti-join on id_b to drop
     duplicated new docs, or route to review.
-
-    r11: ``strategy='fused'`` (default) routes through
-    :func:`_incremental_fused` — one Arrow combo pass per side, band
-    explode with a side tag, bipartite candidate generation + exact
-    verification inside each bucket; one exchange, no checkpoints
-    (measured 5.0 -> ~2 s at sf0.1, identical output). ``'staged'``
-    keeps the r4-r10 pipeline below as the parity reference.
     """
-    if strategy == "fused":
-        return _incremental_fused(
-            index_df,
-            batch_df,
-            text_col,
-            id_col,
-            num_hashes,
-            bands,
-            shingle_len,
-            min_est_jaccard,
-            threshold,
-        )
-    if strategy != "staged":
-        raise ValueError(
-            f"strategy must be 'fused' or 'staged', got {strategy!r}"
-        )
-    sigs_idx = minhash_signatures(
-        index_df, text_col, id_col, num_hashes, shingle_len
-    )
-    sigs_new = minhash_signatures(
-        batch_df, text_col, id_col, num_hashes, shingle_len
-    )
-    left = _banded(sigs_idx, id_col, "a", num_hashes, bands)
-    right = _banded(sigs_new, id_col, "b", num_hashes, bands)
-    rows_per_band = num_hashes // bands
-    agree = sum(
-        F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-
-    def band_agrees(b: int):
-        cond = F.lit(True)
-        for r in range(rows_per_band):
-            k = b * rows_per_band + r
-            cond = cond & (F.col(f"a_{k}") == F.col(f"b_{k}"))
-        return cond
-
-    not_earlier = F.lit(True)
-    for b in range(bands - 1):
-        not_earlier = not_earlier & ~(
-            (F.col("band_idx") > b) & band_agrees(b)
-        )
-    cands = (
-        left.join(right, ["band_idx", "band_key"])
-        .where(not_earlier)
-        .select(
-            "id_a",
-            "id_b",
-            (agree / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= min_est_jaccard)
-        .localCheckpoint(eager=True)
-    )
-    both = index_df.select(id_col, text_col).unionByName(
-        batch_df.select(id_col, text_col)
-    )
-    return _verify_candidate_pairs(
-        both,
-        cands,
+    return _lsh_verified(
+        index_df,
+        batch_df,
         text_col,
         id_col,
+        num_hashes,
+        bands,
         shingle_len,
+        min_est_jaccard,
         threshold,
-        verify_broadcast_docs,
-        verify_broadcast_bytes,
-        verify_block_docs,
     )
 
 

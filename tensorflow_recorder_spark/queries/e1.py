@@ -118,9 +118,9 @@ def q_e1_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_e1_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup of a new batch (doc_id % 10 == 0) against the
-    already-ingested corpus (doc_id % 10 != 0): asymmetric LSH band
-    join (index never self-joins — ingest cost is linear in batch
-    size), then exact-Jaccard verification of candidates only."""
+    already-ingested corpus (doc_id % 10 != 0): only index x batch
+    pairs inside shared LSH buckets are generated and exact-Jaccard
+    verified (the index is never paired with itself)."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.incremental_neardup_pairs(
         docs.where(F.col("doc_id") % 10 != 0),
@@ -934,6 +934,9 @@ FROM inter JOIN sizes s ON s.doc_id = inter.id_a
 WHERE round(n_shared::DOUBLE / s.sz, 6) >= 0.5
 """
 
+# band counts e1_band_sweep compares (and its oracle), over 8 slots
+_SWEEP_BANDS = (2, 4, 8)
+
 def q_e1_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 LSH band-tuning curve (the dedup analog of
     ``e2_nprobe_recall_curve``): candidate recall/precision of MinHash
@@ -985,7 +988,7 @@ def q_e1_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sb), "id_b")
         .where(F.col("__sa") == F.col("__sb"))
         .select(F.lit(bands).cast("int").alias("bands"), "id_a", "id_b")
-        for bands in (2, 4, 8)
+        for bands in _SWEEP_BANDS
     ]
     cand_all = reduce(lambda a, b: a.unionByName(b), cands).localCheckpoint(
         eager=True
@@ -998,9 +1001,7 @@ def q_e1_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bands")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
     )
-    arms = spark.createDataFrame(
-        [(2,), (4,), (8,)], "bands int"
-    )
+    arms = spark.createDataFrame([(b,) for b in _SWEEP_BANDS], "bands int")
     return (
         arms.crossJoin(t)
         .join(c_cnt, "bands", "left")
@@ -1052,7 +1053,7 @@ def _oracle_band_sweep() -> str:
     sampled_src = f"(SELECT * FROM documents WHERE {pred}) sdocs"
     truth = _oracle_jaccard_pairs(pred=pred, with_score=False)
     arms = []
-    for bands in (2, 4, 8):
+    for bands in _SWEEP_BANDS:
         cand = _oracle_lsh_pairs_banded(bands, src=sampled_src)
         arms.append(f"""
 SELECT {bands} AS bands,
@@ -1070,7 +1071,7 @@ SELECT {bands} AS bands,
         f"cb{b} AS (SELECT c.id_a, c.id_b FROM c{b} c "
         f"JOIN documents a ON a.doc_id = c.id_a "
         f"JOIN documents b ON b.doc_id = c.id_b WHERE a.source = b.source)"
-        for b in (2, 4, 8)
+        for b in _SWEEP_BANDS
     )
     body = "\nUNION ALL\n".join(arms)
     return f"WITH truth AS ({truth}),\n{ctes}\n{body}"
@@ -1664,9 +1665,9 @@ def q_e1_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEAR-duplicate in the training corpus — exact n-gram containment
     (e1_contamination) misses paraphrased or lightly-edited leakage,
     which is exactly what published decontamination pipelines hunt
-    with MinHash. Plan: the asymmetric LSH band join (index never
-    self-joins, cost linear in eval size) + exact-Jaccard verify from
-    incremental_neardup_pairs, reused unchanged; the readout is one
+    with MinHash. Plan: incremental_neardup_pairs' index x eval
+    bucket verify (the index is never paired with itself), reused
+    unchanged; the readout is one
     distinct count over the bounded pair frame plus a 1-row eval
     count."""
     docs = _t(spark, sf_dir, "documents")

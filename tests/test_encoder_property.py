@@ -4,6 +4,8 @@ arbitrary inputs (hypothesis-driven)."""
 
 import math
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from tensorflow_recorder_spark.functions.example_proto import (
@@ -29,8 +31,21 @@ def value_for(kind):
     return st.one_of(
         st.none(),
         st.floats(allow_nan=False, allow_infinity=False, width=32),
+        # doubles beyond float32 range: struct.pack('<f') raises on them
+        st.floats(allow_nan=False, width=64),
+        st.sampled_from([1e300, -1e300]),
         st.just(float("nan")),
     )
+
+
+def outcome(fn, *args):
+    """fn(*args), or OverflowError when it raises one (a double beyond
+    float32 range): the fast encoders must decline to the exact path,
+    so both either return the same bytes or both raise."""
+    try:
+        return fn(*args)
+    except OverflowError:
+        return OverflowError
 
 
 @given(st.dictionaries(names, kinds, min_size=1, max_size=6), st.data())
@@ -48,12 +63,13 @@ def test_fast_encoder_matches_reference(schema, data):
             return [int(v)]
         return [float(v)]
 
-    reference = encode_example(
-        {c: (schema[c], canonical(schema[c], v)) for c, v in zip(encoder.columns, values)}
+    reference = outcome(
+        encode_example,
+        {c: (schema[c], canonical(schema[c], v)) for c, v in zip(encoder.columns, values)},
     )
-    assert encoder(values) == reference
-    batch = build_batch_encoder(schema)
-    assert batch([[v] for v in values]) == [reference]
+    assert outcome(encoder, values) == reference
+    batch = outcome(build_batch_encoder(schema), [[v] for v in values])
+    assert batch == (reference if reference is OverflowError else [reference])
 
 
 @given(
@@ -92,3 +108,16 @@ def test_fast_encoder_array_values_roundtrip(floats, ints):
     decoded = decode_example(blob)
     assert decoded["f"][1] == floats
     assert decoded["i"][1] == ints
+
+
+@pytest.mark.parametrize("pa_type", [pa.float64(), pa.int64()])
+@pytest.mark.parametrize("offset", [0, 2])
+def test_batch_encoder_all_null_arrow_column(pa_type, offset):
+    """An all-null Arrow column (no valid value, possibly sliced) encodes
+    exactly as the per-value fallback encodes its Python nulls."""
+    kind = "float" if pa.types.is_floating(pa_type) else "int64"
+    batch = build_batch_encoder({"x": kind})
+    column = pa.nulls(7, pa_type)[offset:]
+    assert batch([column]) == [
+        encode_example({"x": (kind, [])}) for _ in range(len(column))
+    ]

@@ -1004,117 +1004,16 @@ def test_rp_lsh_bucket_and_topk(spark):
     assert len(approx & exact) > 0
 
 
-def test_lsh_verified_blocked_fallback_parity(spark):
-    """All three verify plans must be bit-identical: the r11 fused
-    bucket strategy (default), the staged broadcast join, and the
-    staged blocked cogroup (forced via verify_broadcast_docs=0)."""
+def test_lsh_verified_blocked_fallback_parity(spark, dedup_reference):
+    """lsh_verified_pairs must be bit-identical to the DuckDB-oracle
+    reference at the loose policy point (est >= 0.25, Jaccard >= 0.25)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kw = dict(min_est_jaccard=0.25, threshold=0.25)
-    fused = {
+    got = {
         (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
         for r in dedup.lsh_verified_pairs(docs, "text", "doc_id", **kw).collect()
     }
-    bc = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in dedup.lsh_verified_pairs(
-            docs, "text", "doc_id", strategy="staged", **kw
-        ).collect()
-    }
-    fb = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in dedup.lsh_verified_pairs(
-            docs, "text", "doc_id", strategy="staged",
-            verify_broadcast_docs=0, **kw
-        ).collect()
-    }
-    assert fused == bc == fb and len(bc) > 0
-
-
-def test_blocked_verify_sparse_path_matches_dense(spark):
-    """r9 (r8 verdict item 6): blocks whose doc x vocab dense matrix
-    would blow the byte budget verify by per-pair sorted-array
-    intersection instead — forcing dense_budget_bytes=0 must reproduce
-    the dense einsum results bit-identically (integer intersection
-    counts either way)."""
-    from tensorflow_recorder_spark.operators.dedup import (
-        _verify_candidate_pairs,
-        _verify_pairs_blocked,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = minhash_signatures(docs, "text", "doc_id", 8, 5)
-    cands = lsh_candidate_pairs(sigs, "doc_id", 8, 4, 0.25).localCheckpoint(
-        eager=True
-    )
-    from pyspark.sql import functions as _F
-
-    cand_ids = (
-        cands.select(_F.col("id_a").alias("doc_id"))
-        .union(cands.select(_F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    from tensorflow_recorder_spark.operators.dedup import hashed_shingle_expr
-
-    sh = (
-        docs.join(cand_ids, "doc_id", "left_semi")
-        .select(
-            "doc_id",
-            _F.expr(hashed_shingle_expr("lower(text)", 5, pre_lowered=True)).alias(
-                "__sh"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # r11: the per-block kernel choice (popcount vs CSR) is cost-based
-    # and internal; pin instead that the blocked cogroup is unaffected
-    # by block size (1 block vs many blocks => same pairs), and that
-    # threshold pushdown inside the kernel matches JVM-side filtering.
-    one_block = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in _verify_pairs_blocked(
-            cands, sh, "doc_id", pairs_per_block=1 << 40
-        ).collect()
-    }
-    many_blocks = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in _verify_pairs_blocked(
-            cands, sh, "doc_id", pairs_per_block=64
-        ).collect()
-    }
-    assert one_block == many_blocks and len(one_block) > 0
-    pushed = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in _verify_pairs_blocked(
-            cands, sh, "doc_id", threshold=0.3
-        ).collect()
-    }
-    assert pushed == {
-        k: v for k, v in one_block.items() if v[1] >= 0.3
-    } and len(pushed) > 0
-
-
-def test_lsh_verified_byte_gate_forces_fallback(spark):
-    """The broadcast gate is byte-based: tiny verify_broadcast_bytes must
-    route through the blocked path even when the doc count fits, and the
-    result stays identical."""
-    near = "the quick brown fox jumps over the lazy dog again and again"
-    df = spark.createDataFrame(
-        [(1, near), (2, near), (3, near.replace("dog", "cat"))],
-        "id long, txt string",
-    )
-    default = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.lsh_verified_pairs(df, "txt", "id").collect()
-    }
-    gated = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.lsh_verified_pairs(
-            df, "txt", "id", strategy="staged", verify_broadcast_bytes=1
-        ).collect()
-    }
-    assert default == gated and (1, 2) in gated
+    assert got == dedup_reference(docs, 0.25, 0.25) and len(got) > 0
 
 
 def test_duplicate_clusters_nonconvergence_raises(spark):

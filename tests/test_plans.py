@@ -88,27 +88,6 @@ def test_anti_join_stays_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_lsh_verify_joins_broadcast_shingle_sides(spark):
-    """The STAGED verify must broadcast both shingle sides below the
-    candidate-doc/pair thresholds: the shuffled formulation moves
-    |pairs| x shingle-array bytes twice and skews on duplicate-family
-    hot ids. (The r11 default is the fused bucket strategy — pinned by
-    test_lsh_fused_plan_single_exchange below.)"""
-    import contextlib
-    import io
-
-    from tensorflow_recorder_spark.operators.dedup import lsh_verified_pairs
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = lsh_verified_pairs(docs, "text", "doc_id", strategy="staged")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "SortMergeJoin" not in plan
-
-
 def test_lsh_fused_plan_single_exchange(spark):
     """The fused fuzzy-dedup plan must stay join-free with the corpus
     payload shuffled ONCE. r12 default shape: map pass (signatures +
@@ -136,40 +115,6 @@ def test_lsh_fused_plan_single_exchange(spark):
     assert "Join" not in plan, plan
     assert "MapInPandas" in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
-
-
-def test_lsh_fused_defer_plan_shape(spark):
-    """With the giant-bucket scale knob enabled (production:
-    SPARK_GRAFT_DEFER_ROWS=4096) the plan gains the block-verify
-    branch: a defer pass over the SAME banded exchange (statically the
-    shared subtree prints twice — 5 Exchange nodes: 2 in the pairs
-    branch, 2 duplicated in the defer branch, 1 feeding the block
-    stage; at runtime AQE stage reuse materializes the banded shuffle
-    once, verified in the r12 stage profile) unioned with the pairs
-    pass. Still no joins, and the only grouped python stage is the
-    block verify."""
-    import contextlib
-    import io
-
-    from tensorflow_recorder_spark.operators.dedup import (
-        _lsh_verified_fused,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = _lsh_verified_fused(
-        docs, "text", "doc_id", 8, 4, 5, 0.25, 0.3, defer_rows=4096
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 5, plan
-    assert "Join" not in plan, plan
-    assert "MapInPandas" in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
-    assert len(re.findall(r"\(\d+\) Union", plan)) == 1, plan
 
 
 def test_partitioned_events_scan_prunes_date_range(spark, tmp_path):

@@ -1,11 +1,11 @@
 """Round-11 optimization tests: the vectorized verify kernels, the
 interned shingle-hash pass, and the fused LSH-bucket fuzzy-dedup plan.
 
-These pin the INTERNALS the r11 optimization round changed
-(operators/dedup.py): the blocked/bucket verify kernels must agree with
-a brute-force set computation, the Python shingle pass must reproduce
-the SQL expression bit-for-bit, and the fused strategy must reproduce
-the staged pipeline's output exactly at every policy point.
+These pin the INTERNALS the r11 optimization round changed: the bucket
+verify kernels (functions/jaccard_verify.py) must agree with a
+brute-force set computation, the Python shingle pass must reproduce the
+SQL expression bit-for-bit, and the fused plan must reproduce the
+DuckDB-oracle reference exactly at every policy point.
 """
 
 from __future__ import annotations
@@ -15,13 +15,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tensorflow_recorder_spark.functions.jaccard_verify import (
+    delta_csr,
+    intersect_counts_csr,
+    intersect_counts_delta,
+    intersect_counts_popcount,
+)
 from tensorflow_recorder_spark.operators import dedup
 from tensorflow_recorder_spark.operators.dedup import (
-    _delta_csr,
-    _hashed_shingles_arrow,
-    _intersect_counts_csr,
-    _intersect_counts_delta,
-    _intersect_counts_popcount,
+    _signatures_and_shingles_arrow,
     hashed_shingle_expr,
 )
 
@@ -41,8 +43,8 @@ def _random_csr(rng, n_docs, universe, max_len):
 
 
 def test_intersect_kernels_match_bruteforce():
-    """Both r11 verify kernels (CSR mask + packed-bitset popcount) must
-    produce exact intersection counts on randomized set families,
+    """The verify kernels (CSR mask, packed-bitset popcount, core delta)
+    must produce exact intersection counts on randomized set families,
     including empty sets, self-pairs, and repeated pairs."""
     rng = np.random.RandomState(7)
     for _ in range(150):
@@ -56,11 +58,11 @@ def test_intersect_kernels_match_bruteforce():
             [len(np.intersect1d(sets[a], sets[b])) for a, b in zip(ai, bi)],
             dtype=np.int64,
         )
-        got_csr = _intersect_counts_csr(indptr, indices, ai, bi)
+        got_csr = intersect_counts_csr(indptr, indices, ai, bi)
         nvocab = int(indices.max()) + 1 if len(indices) else 0
-        got_pop = _intersect_counts_popcount(indptr, indices, nvocab, ai, bi)
-        csize, Mip, Mix, Pip, Pix = _delta_csr(indptr, indices, nvocab)
-        got_delta = _intersect_counts_delta(
+        got_pop = intersect_counts_popcount(indptr, indices, nvocab, ai, bi)
+        csize, Mip, Mix, Pip, Pix = delta_csr(indptr, indices, nvocab)
+        got_delta = intersect_counts_delta(
             csize, Mip, Mix, Pip, Pix, ai, bi
         )
         assert np.array_equal(got_csr, want)
@@ -88,7 +90,9 @@ def test_hashed_shingles_arrow_matches_sql(spark):
     }
     py_sh = {
         r["doc_id"]: list(r["__sh"])
-        for r in _hashed_shingles_arrow(docs, "text", "doc_id", 5).collect()
+        for r in _signatures_and_shingles_arrow(docs, "text", "doc_id", 8, 5)
+        .select("doc_id", "__sh")
+        .collect()
     }
     assert sql_sh == py_sh and len(py_sh) > 0
 
@@ -116,65 +120,36 @@ def test_hashed_shingles_arrow_short_and_empty_docs(spark):
     }
     py_sh = {
         r["doc_id"]: list(r["__sh"])
-        for r in _hashed_shingles_arrow(df, "text", "doc_id", 5).collect()
+        for r in _signatures_and_shingles_arrow(df, "text", "doc_id", 8, 5)
+        .select("doc_id", "__sh")
+        .collect()
     }
     assert sql_sh == py_sh
+
+
+def _pairs(df):
+    return {
+        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
+        for r in df.collect()
+    }
 
 
 @pytest.mark.parametrize(
     "min_est,thr", [(0.25, 0.25), (0.25, 0.3), (0.5, 0.5)]
 )
-def test_fused_matches_staged_all_policy_points(spark, min_est, thr):
-    """The fused bucket strategy must reproduce the staged pipeline
+def test_fused_matches_staged_all_policy_points(
+    spark, dedup_reference, min_est, thr
+):
+    """lsh_verified_pairs must reproduce the DuckDB-oracle reference
     exactly — pair set, est_jaccard doubles, jaccard doubles — at the
     loose, default, and dedup-policy thresholds."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(min_est_jaccard=min_est, threshold=thr)
-    fused = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in dedup.lsh_verified_pairs(
-            docs, "text", "doc_id", **kw
-        ).collect()
-    }
-    staged = {
-        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-        for r in dedup.lsh_verified_pairs(
-            docs, "text", "doc_id", strategy="staged", **kw
-        ).collect()
-    }
-    assert fused == staged and len(fused) > 0
-
-
-def test_fused_rejects_unknown_strategy(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    with pytest.raises(ValueError, match="strategy"):
-        dedup.lsh_verified_pairs(docs, "text", "doc_id", strategy="bogus")
-
-
-def test_staged_pair_count_gate_routes_blocked(spark):
-    """r11: beyond verify_blocked_min_pairs candidates the staged
-    verify must route through the blocked cogroup even when the payload
-    would fit a broadcast (the per-pair JVM array_intersect cost, not
-    memory, is the binding constraint)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan_forced = (
+    got = _pairs(
         dedup.lsh_verified_pairs(
-            docs, "text", "doc_id", strategy="staged",
-            verify_blocked_min_pairs=1,
+            docs, "text", "doc_id", min_est_jaccard=min_est, threshold=thr
         )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
     )
-    assert "FlatMapCoGroupsInPandas" in plan_forced
-    plan_default = (
-        dedup.lsh_verified_pairs(docs, "text", "doc_id", strategy="staged")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # sf0.001 has ~28K candidates, under the 65536 default: broadcast
-    assert "FlatMapCoGroupsInPandas" not in plan_default
+    assert got == dedup_reference(docs, min_est, thr) and len(got) > 0
 
 
 def test_pagerank_three_tiers_identical(spark):
@@ -207,100 +182,62 @@ def test_pagerank_three_tiers_identical(spark):
     assert top == mid == dist and len(top) > 0
 
 
-def test_incremental_fused_matches_staged(spark):
-    """r11: the fused bipartite bucket strategy must reproduce the
-    staged asymmetric pipeline exactly — pair set, est_jaccard,
-    jaccard — including self-pairs when the two sides overlap (the
-    staged band join has no id inequality filter)."""
-    from pyspark.sql import functions as F
-
+def test_incremental_fused_matches_staged(spark, dedup_reference):
+    """incremental_neardup_pairs must reproduce the DuckDB-oracle
+    reference exactly — pair set, est_jaccard, jaccard — including
+    self-pairs when the two sides overlap (docs x docs)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = docs.where(F.col("doc_id") % 10 != 0)
     bat = docs.where(F.col("doc_id") % 10 == 0)
-
-    def pairs(**kw):
-        return {
-            (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-            for r in dedup.incremental_neardup_pairs(
-                idx, bat, "text", "doc_id", **kw
-            ).collect()
-        }
-
-    fused, staged = pairs(), pairs(strategy="staged")
-    assert fused == staged and len(fused) > 0
-    ov_f = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.incremental_neardup_pairs(
-            docs, docs, "text", "doc_id"
-        ).collect()
-    }
-    ov_s = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.incremental_neardup_pairs(
-            docs, docs, "text", "doc_id", strategy="staged"
-        ).collect()
-    }
-    assert ov_f == ov_s and len(ov_f) > 0
-
-
-def test_fused_giant_bucket_threaded_path_identical(spark):
-    """r11 continuation: the in-task threaded giant-bucket kernels
-    (partial-matrix slot paints summed, panel sgemm) must be
-    bit-identical to the serial matrix path. giant_rows=2 forces every
-    bucket through the threaded branch; the arithmetic is exact by
-    construction (uint8 partial sums <= nh; sgemm cells are 0/1 dot
-    products — integers < 2^24, exact in float32 under any split)."""
-    from tensorflow_recorder_spark.operators.dedup import (
-        _lsh_verified_fused,
+    got = _pairs(dedup.incremental_neardup_pairs(idx, bat, "text", "doc_id"))
+    assert got == dedup_reference(docs, 0.25, 0.3, "incremental")
+    assert len(got) > 0
+    overlap = _pairs(
+        dedup.incremental_neardup_pairs(docs, docs, "text", "doc_id")
     )
+    assert overlap == dedup_reference(docs, 0.25, 0.3, "all")
+    assert any(a == b for a, b in overlap)
 
+
+def test_fused_giant_bucket_threaded_path_identical(spark, dedup_reference):
+    """The in-task threaded giant-bucket kernels (partial-matrix slot
+    paints summed, panel sgemm, the chunk pool) and the chunked path
+    must reproduce the reference exactly. giant_rows=2 forces every
+    bucket through the threaded branch and matrix_budget=0 down the
+    chunked one; the arithmetic is exact by construction (uint8 partial
+    sums <= nh; sgemm cells are 0/1 dot products — integers < 2^24,
+    exact in float32 under any split)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
     def pairs(**kw):
-        return {
-            (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-            for r in _lsh_verified_fused(
-                docs, "text", "doc_id", 8, 4, 5, 0.25, 0.3, **kw
-            ).collect()
-        }
+        return _pairs(
+            dedup._lsh_verified(
+                docs, None, "text", "doc_id", 8, 4, 5, 0.25, 0.3, **kw
+            )
+        )
 
-    serial = pairs()
-    threaded = pairs(giant_rows=2, giant_threads=3)
-    assert serial == threaded and len(serial) > 0
-    # matrix_budget=0 forces every bucket down the CHUNKED path, so the
-    # threaded chunk pool (lock-guarded Mf32/delta lazies) is exercised
-    chunked_threaded = pairs(
-        giant_rows=2, giant_threads=3, matrix_budget=0
-    )
-    assert serial == chunked_threaded
-    chunked_serial = pairs(matrix_budget=0)
-    assert serial == chunked_serial
+    want = dedup_reference(docs, 0.25, 0.3)
+    assert pairs(giant_rows=2, giant_threads=3) == want and len(want) > 0
+    assert pairs(giant_rows=2, giant_threads=3, matrix_budget=0) == want
+    assert pairs(matrix_budget=0) == want
 
 
-def test_incremental_fused_giant_bucket_threaded_identical(spark):
-    """Bipartite analog: the threaded chunk pool in _incremental_fused
-    must reproduce the serial path exactly."""
-    from pyspark.sql import functions as F
-
-    from tensorflow_recorder_spark.operators.dedup import (
-        _incremental_fused,
-    )
-
+def test_incremental_fused_giant_bucket_threaded_identical(
+    spark, dedup_reference
+):
+    """Bipartite analog: the threaded chunk pool must reproduce the
+    reference exactly."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = docs.where(F.col("doc_id") % 10 != 0)
     bat = docs.where(F.col("doc_id") % 10 == 0)
-
-    def pairs(**kw):
-        return {
-            (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-            for r in _incremental_fused(
-                idx, bat, "text", "doc_id", 8, 4, 5, 0.25, 0.3, **kw
-            ).collect()
-        }
-
-    serial = pairs()
-    threaded = pairs(giant_rows=2, giant_threads=3)
-    assert serial == threaded and len(serial) > 0
+    threaded = _pairs(
+        dedup._lsh_verified(
+            idx, bat, "text", "doc_id", 8, 4, 5, 0.25, 0.3,
+            giant_rows=2, giant_threads=3,
+        )
+    )
+    want = dedup_reference(docs, 0.25, 0.3, "incremental")
+    assert threaded == want and len(want) > 0
 
 
 def test_ivf_assign_nested_matches_per_arm(spark):

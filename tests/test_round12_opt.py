@@ -15,52 +15,36 @@ import time
 sys.path.insert(0, "/root/repo")
 
 
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
+def _pairs(df):
+    return {
+        (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
+        for r in df.collect()
+    }
 
 
-def test_fused_partition_pass_and_block_decomposition_parity(spark):
+def test_fused_partition_pass_and_block_decomposition_parity(
+    spark, dedup_reference
+):
     """r12 verdict item 3: the fused dedup's per-partition verify pass
-    (default) and the giant-bucket block-verify branch (forced via
-    defer_rows/defer_block so every bucket defers into tiny blocks)
-    must produce exactly the rows of the staged reference pipeline —
-    the block decomposition is exact (each i<j pair exists in exactly
-    one upper-triangle block pair) and the per-bucket arithmetic is
-    unchanged."""
-    from tensorflow_recorder_spark.operators.dedup import (
-        _lsh_verified_fused,
-        lsh_verified_pairs,
-    )
+    must produce exactly the DuckDB-oracle reference rows at the
+    default and the dedup-policy thresholds."""
+    from tensorflow_recorder_spark.operators.dedup import lsh_verified_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for nh, bands, sl, me, th in [
         (8, 4, 5, 0.25, 0.3),
         (8, 4, 5, 0.5, 0.5),
     ]:
-        base = _canon(
-            _lsh_verified_fused(
-                docs, "text", "doc_id", nh, bands, sl, me, th, defer_rows=0
-            )
+        got = _pairs(
+            lsh_verified_pairs(docs, "text", "doc_id", nh, bands, sl, me, th)
         )
-        forced = _canon(
-            _lsh_verified_fused(
-                docs, "text", "doc_id", nh, bands, sl, me, th,
-                defer_rows=4, defer_block=2,
-            )
-        )
-        staged = _canon(
-            lsh_verified_pairs(
-                docs, "text", "doc_id", nh, bands, sl, me, th,
-                strategy="staged",
-            )
-        )
-        assert base == forced == staged
-        assert len(base) > 0
+        assert got == dedup_reference(docs, me, th)
+        assert len(got) > 0
 
 
-def test_incremental_fused_partition_pass_parity(spark):
+def test_incremental_fused_partition_pass_parity(spark, dedup_reference):
     """r12: the bipartite fused dedup's partition pass must match the
-    staged incremental pipeline row-for-row."""
+    DuckDB-oracle reference row-for-row."""
     from pyspark.sql import functions as F
 
     from tensorflow_recorder_spark.operators.dedup import (
@@ -70,16 +54,9 @@ def test_incremental_fused_partition_pass_parity(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     index = docs.where(F.col("doc_id") % 10 != 0)
     batch = docs.where(F.col("doc_id") % 10 == 0)
-    fused = _canon(
-        incremental_neardup_pairs(index, batch, "text", "doc_id")
-    )
-    staged = _canon(
-        incremental_neardup_pairs(
-            index, batch, "text", "doc_id", strategy="staged"
-        )
-    )
-    assert fused == staged
-    assert len(fused) > 0
+    got = _pairs(incremental_neardup_pairs(index, batch, "text", "doc_id"))
+    assert got == dedup_reference(docs, 0.25, 0.3, "incremental")
+    assert len(got) > 0
 
 
 def test_mem_reference_is_time_bounded():
@@ -104,11 +81,17 @@ def test_mem_reference_is_time_bounded():
     assert wall < 2.0, wall
 
 
-def test_bench_hygiene_budget_fields_and_deadline_machinery():
+def test_bench_hygiene_budget_fields_and_deadline_machinery(
+    monkeypatch, tmp_path, capsys
+):
     """r12 verdict item 1: the committed record must carry the unified
     hygiene budget, its spend, the hard wall budget, and the
-    degradation audit fields; the SIGALRM deadline class must exist so
-    a stuck host can never produce rc=124 with no JSON line."""
+    degradation audit fields; the SIGALRM deadline must cut the run
+    short with the JSON line and rc=0 — also when it expires during
+    the pre-flight probes, before any query ran."""
+    import json
+    import signal
+
     import bench
 
     src = open(bench.__file__).read()
@@ -125,3 +108,28 @@ def test_bench_hygiene_budget_fields_and_deadline_machinery():
     ):
         assert field in src, field
     assert issubclass(bench._Deadline, Exception)
+
+    def slow_probe(*_args, **_kw):
+        time.sleep(3)
+        return 0.0
+
+    monkeypatch.setattr(bench, "_cpu_reference", slow_probe)
+    monkeypatch.setattr(bench, "_mem_reference", lambda *a, **k: 0.0)
+    # the record is written next to bench.py's __file__
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_WALL_S", "1")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PATIENT", "0")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    old_handler = signal.getsignal(signal.SIGALRM)
+    try:
+        assert bench.main() == 0
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old_handler)
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["deadline_hit"] is True
+    assert summary["n_queries"] == 0
+    record = json.loads((tmp_path / "BENCH_LOCAL.json").read_text())
+    assert record["deadline_hit"] is True
+    assert record["cpu_reference_s_before"] is None

@@ -477,24 +477,3 @@ def test_auto_bucket_seconds_degenerate_inputs(spark):
     assert auto_bucket_seconds(empty, empty_r, "ls", "le", "rs", "re") == 3600
     one = spark.createDataFrame([(1, 0, 99)], "lid int, ls long, le long")
     assert auto_bucket_seconds(one, empty_r, "ls", "le", "rs", "re") == 100
-
-
-def test_verify_gate_routes_on_bytes_not_doc_count(spark):
-    """r9: bytes are the primary broadcast gate; the doc-count backstop
-    defaults to 1M so a many-docs-but-light corpus broadcasts (the 30x
-    mis-route: 150K docs / 245MB went blocked and paid a 2.3x
-    degenerate-cogroup penalty). The broadcast plan carries NO python
-    cogroup; forcing the byte gate down flips it to the blocked path."""
-    from tensorflow_recorder_spark.operators import dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kw = dict(min_est_jaccard=0.25, threshold=0.25)
-    bc_plan = dedup.lsh_verified_pairs(
-        docs, "text", "doc_id", strategy="staged", **kw
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in bc_plan  # broadcast path
-    blocked_plan = dedup.lsh_verified_pairs(
-        docs, "text", "doc_id", strategy="staged",
-        verify_broadcast_bytes=1, **kw
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in blocked_plan  # blocked path
