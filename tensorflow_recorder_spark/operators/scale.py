@@ -18,7 +18,7 @@ plan as literals — no join, no shuffle on the apply side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..constants import TRAIN
 
@@ -30,11 +30,24 @@ def fit_scale_stats(
     one collected row — safe at any scale."""
     if not columns:
         return {}
+    return scale_stats_from_row(train_df.agg(*scale_aggregates(columns)).collect()[0], columns)
+
+
+def scale_aggregates(columns: list[str], where: Column | None = None) -> list[Column]:
+    """The (mean, stddev_pop) aggregate of each column, over the rows
+    matching ``where`` (all rows if None). Both aggregates skip nulls, so
+    ``avg(when(where, c))`` over a frame equals ``avg(c)`` over the
+    filtered frame bit for bit: same rows, same order."""
     aggs = []
     for c in columns:
-        aggs.append(F.avg(F.col(c)).alias(f"__mean_{c}"))
-        aggs.append(F.stddev_pop(F.col(c)).alias(f"__std_{c}"))
-    row = train_df.agg(*aggs).collect()[0]
+        value = F.col(c) if where is None else F.when(where, F.col(c))
+        aggs.append(F.avg(value).alias(f"__mean_{c}"))
+        aggs.append(F.stddev_pop(value).alias(f"__std_{c}"))
+    return aggs
+
+
+def scale_stats_from_row(row, columns: list[str]) -> dict[str, tuple[float, float]]:
+    """Read :func:`scale_aggregates`' results out of a collected row."""
     return {c: (row[f"__mean_{c}"], row[f"__std_{c}"]) for c in columns}
 
 

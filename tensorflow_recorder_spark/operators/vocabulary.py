@@ -27,12 +27,15 @@ with identical output:
   task ever holds the whole vocabulary.
 
 The apply is a broadcast hash join (vocab is fitted state), so no
-shuffle touches the fact table.
+shuffle touches the fact table. :func:`fit_and_apply_vocabularies`
+ranks the collected counts on the driver (:func:`vocabulary_values`)
+and re-enters them as a local relation, so the fit runs once however
+many actions read the transformed frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..constants import OOV_INDEX, TRAIN
 
@@ -139,23 +142,52 @@ def apply_vocabulary(
     ).drop("__vocab_value", "__vocab_index")
 
 
+def vocabulary_values(train_df: DataFrame, column: str) -> list[str]:
+    """:func:`fit_vocabulary`'s ranking, finished on the driver: ONE
+    groupBy-count job collects the per-value TRAIN counts — bounded by
+    label cardinality, the fitted state itself — and they are ranked by
+    count desc, value asc. Spark orders strings by UTF-8 bytes, hence the
+    byte key (same order as ``ORDER BY count DESC, value ASC``)."""
+    rows = _value_counts(train_df, column, "value").collect()
+    rows.sort(key=lambda r: (-r["_freq"], r["value"].encode("utf-8")))
+    return [r["value"] for r in rows]
+
+
+def vocabulary_frame(spark: SparkSession, values: list[str]) -> DataFrame:
+    """The fitted (value, index) vocabulary as a driver-local relation.
+
+    Built from an Arrow table, it enters the plan as a ``LocalRelation``
+    — no Python RDD, no recomputation of the fit in later actions; its
+    broadcast is a one-task job that runs no Python."""
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            "value": pa.array(values, pa.string()),
+            "index": pa.array(range(len(values)), pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table)
+
+
 def fit_and_apply_vocabularies(
     df: DataFrame,
     vocab_columns: list[str],
     split_key: str = "split",
     train_value: str = TRAIN,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
+) -> tuple[DataFrame, dict[str, list[str]]]:
     """Fit each vocabulary on the TRAIN subset, apply to the whole frame
     (A3 fit-on-train / apply-to-all; reference beam_pipeline.py:296-313).
 
-    Returns (transformed df, {column: vocab DataFrame}) — the vocab frames
-    are the fitted state to persist as assets (K4).
+    One count job per column; the ranked values are collected once, so
+    later actions over the transformed frame never re-run the fit.
+    Returns (transformed df, {column: values in index order}) — the
+    values are the fitted state to persist as assets (K4).
     """
     train = df.where(F.col(split_key) == train_value)
-    vocabs: dict[str, DataFrame] = {}
+    vocabs: dict[str, list[str]] = {}
     out = df
     for column in vocab_columns:
-        vocab = fit_vocabulary(train, column)
-        vocabs[column] = vocab
-        out = apply_vocabulary(out, column, vocab)
+        vocabs[column] = vocabulary_values(train, column)
+        out = apply_vocabulary(out, column, vocabulary_frame(df.sparkSession, vocabs[column]))
     return out, vocabs

@@ -22,7 +22,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..functions import fs
 from ..schema import Schema
@@ -35,16 +35,15 @@ def vocab_asset_path(job_dir: str, column: str) -> str:
     return fs.join(job_dir, VOCAB_ASSET_DIR, f"vocab_{column}_vocabulary")
 
 
-def write_vocabulary_assets(job_dir: str, vocabs: dict[str, DataFrame]) -> None:
+def write_vocabulary_assets(job_dir: str, vocabs: dict[str, list[str]]) -> None:
     """Persist each fitted vocabulary as a text asset, one value per line
-    in index order. Vocabularies are fitted state (bounded, already
-    aggregated) — collecting them to the driver is the design, exactly as
-    the reference materializes them into SavedModel assets."""
+    in index order. The values were collected by the fit (bounded by
+    label cardinality, exactly as the reference materializes them into
+    SavedModel assets), so writing them runs no Spark job."""
     fs.makedirs(fs.join(job_dir, VOCAB_ASSET_DIR))
-    for column, vocab in vocabs.items():
-        rows = vocab.orderBy("index").collect()
+    for column, values in vocabs.items():
         with fs.open_output(vocab_asset_path(job_dir, column), "w") as fh:
-            fh.write("\n".join(r["value"] for r in rows))
+            fh.write("\n".join(values))
 
 
 def read_vocabulary_asset(job_dir: str, column: str) -> list[str]:

@@ -7,15 +7,19 @@ write sharded, optionally gzip-compressed files named
 runner pick sharding (converter.py:290-291).
 
 Spark-first design:
-  * Row -> Example encoding happens in ``mapInPandas`` (Arrow-batched;
-    the per-row proto build is unavoidable — it IS the output format —
-    but framing/IO are amortized per partition, not per row).
-  * One encode pass is shared by all splits (the encoded frame is cached
-    by the caller); each split's write is a partition-parallel job with
-    zero driver materialization.
-  * ``num_shards=0`` keeps the encode partitioning (AQE-coalesced), so
-    shard count tracks data size; an explicit ``num_shards`` becomes a
-    ``repartition`` (round-robin) before the write.
+  * ONE ``mapInArrow`` writer per partition encodes the rows of each
+    wanted split (the per-row proto build is unavoidable — it IS the
+    output format — but it runs over the Arrow arrays Spark already
+    holds), frames them (masked crc32c), compresses and appends them to
+    at most |splits| open shard files. Serialized Examples never cross
+    back into the JVM; only a (split, path, n) manifest row per shard
+    reaches the driver, which renames the shards to contiguous
+    ``<split>-SSSSS-of-NNNNN`` names.
+  * ``num_shards=0`` keeps the input partitioning (the caller spreads
+    and caches it), so all splits are written in one pass and shard
+    count tracks data size; an explicit ``num_shards`` encodes once
+    (cached), then runs one round-robin ``repartition`` plus the same
+    writer per split.
   * Executors write files directly (shared filesystem). A task retry can
     leave a partial file that the retry overwrites — same-name
     idempotent writes, acceptable for a direct local/DFS sink; a
@@ -26,17 +30,12 @@ Spark-first design:
 
 from __future__ import annotations
 
-
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..constants import GZIP_SUFFIX, TFRECORD_SUFFIX, ZLIB_SUFFIX
 from ..functions import fs
 from ..functions.example_proto import build_batch_encoder
-from ..functions.partitioning import spread_to_parallelism
-from ..functions.tfrecord_io import frame_records, open_maybe_gzip, open_output
+from ..functions.tfrecord_io import frame_records, open_output
 
 # Spark simpleString -> Example feature kind
 _KIND_BY_TYPE = {
@@ -75,246 +74,186 @@ def feature_kinds(df: DataFrame, exclude: tuple[str, ...] = ()) -> dict[str, str
     return kinds
 
 
-def encode_examples(
-    df: DataFrame, split_key: str = "split", keep_split: bool = True
-) -> DataFrame:
-    """Encode every row into a serialized Example (K1).
+def shard_suffix(compression: str | None) -> str:
+    """File suffix for ``compression``: 'gzip' (default), 'zlib' (TF's
+    ZLIB whole-file stream; reference infers it from the .zlib
+    extension, dataset_loader.py:32-35), or None/'' for raw. Any other
+    value raises before a job runs or a directory is made."""
+    if compression not in (None, "", "gzip", "zlib"):
+        raise ValueError(f"unsupported TFRecord compression {compression!r}")
+    return {"gzip": GZIP_SUFFIX, "zlib": ZLIB_SUFFIX}.get(compression or "", TFRECORD_SUFFIX)
 
-    Output schema: (split string, example binary). The split column rides
-    along for write routing but — matching the reference, whose Examples
-    include the split feature (it is part of the schema) — it is also
-    encoded into the proto.
-    """
-    kinds = feature_kinds(df)
-    if not keep_split:
-        kinds = {k: v for k, v in kinds.items() if k != split_key}
-    encoder = build_batch_encoder(kinds)
-    columns = encoder.columns  # sorted canonical order
+
+def encode_examples(df: DataFrame, split_key: str = "split") -> DataFrame:
+    """Encode every row into a serialized Example (K1): (split, example).
+
+    The split column rides along for routing and — matching the
+    reference, whose Examples include the split feature — is also
+    encoded into the proto. Only the explicit-``num_shards`` path needs
+    the encoded frame; the default path encodes inside the writer."""
+    encoder = build_batch_encoder(feature_kinds(df))
 
     def encode_batches(batches):
-        # r12: mapInArrow — the encoder's column fast paths consume the
-        # Arrow arrays Spark already holds (grouped-by-wire-width numpy
-        # assembly, example_proto.py), so the previous
-        # pandas-materialize + astype(object) + tolist() round-trip per
-        # column is gone; the per-value python loops remain only as the
-        # exact-semantics fallback for inputs the fast paths decline
-        # (sub-lists, mixed types). Measured single-core on 600k
-        # lineitem-shaped rows: 3.62 -> 1.72 s, byte-identical output.
         import pyarrow as pa
 
         for rb in batches:
-            names = rb.schema.names
-            cols = [rb.column(names.index(c)) for c in columns]
             yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(names.index(split_key)),
-                    pa.array(encoder(cols), type=pa.binary()),
-                ],
+                [rb.column(split_key), pa.array(_encode(encoder, rb), type=pa.binary())],
                 names=["split", "example"],
             )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("split", T.StringType()),
-            T.StructField("example", T.BinaryType()),
-        ]
-    )
-    # Example encoding is per-row Python: its parallelism equals the input
-    # partition count. A source that scanned into fewer partitions than
-    # the session has cores (one ~40 MB parquet file -> 3 partitions)
-    # would leave most workers idle through the most expensive stage of
-    # convert — fan out first (measured 3x on 600k rows at local[32]).
-    # At num_shards=0 this also sets "runner-chosen" shard count, exactly
-    # the reference's semantics (converter.py:290-291).
-    df = spread_to_parallelism(df)
-    return df.mapInArrow(encode_batches, schema=out_schema)
+    return df.mapInArrow(encode_batches, schema="split string, example binary")
 
 
-def write_all_splits(
-    encoded: DataFrame,
+def _encode(encoder, rb) -> list[bytes]:
+    # The encoder's column fast paths consume Arrow arrays directly
+    # (example_proto.py); columns go in its sorted canonical order.
+    return encoder([rb.column(c) for c in encoder.columns])
+
+
+_MANIFEST = "split string, path string, n bigint"
+
+
+def _write_shards(
+    df: DataFrame,
     job_dir: str,
-    splits: list[str],
-    compression: str | None = "gzip",
-    num_shards: int = 0,
-) -> dict[str, dict[str, int]]:
-    """Write every split's Examples in ONE pass (K2, batch convert path).
+    prefixes: dict[str, str],
+    split_key: str,
+    compression: str | None,
+    tmp_name,
+    encoded: bool = False,
+    eager: bool = False,
+) -> list:
+    """Run the writer over ``df`` and collect its manifest rows.
 
-    With ``num_shards=0`` (runner-chosen, the default) a single
-    Arrow-batched ``mapInPandas`` walks each partition once and appends
-    rows to at most |splits| open shard files, so the encoded frame is
-    scanned once regardless of split count. Shard files are written
-    under partition-id temp names and renamed by the driver to
-    contiguous ``<split>-SSSSS-of-NNNNN`` (a rename manifest, not data,
-    crosses to the driver). Splits that end up empty still get one
-    empty shard (V8 parity). Returns {split: {path: record_count}}.
+    Each partition appends the rows of every wanted split (the keys of
+    ``prefixes``) to its own shard, staged as ``tmp_name(prefix, pid)``
+    (gzip records that name in its header). ``encoded`` input already
+    holds an ``example`` column; ``eager`` opens every split's shard even
+    in an empty partition."""
+    encoder = None if encoded else build_batch_encoder(feature_kinds(df))
 
-    An explicit ``num_shards`` applies PER SPLIT — the reference's
-    ``WriteToTFRecord(num_shards=N)`` runs per split
-    (beam_pipeline.py:303-313), so every split gets exactly N shards.
-    That routes through one repartition+write job per split over the
-    cached encoded frame (a deliberate trade: exact shard counts cost
-    one scan per split; the auto path stays single-pass).
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
 
-    ``compression``: 'gzip' (default), 'zlib' (TF's ZLIB whole-file
-    stream; reference infers it from the .zlib extension,
-    dataset_loader.py:32-35), or None for raw.
-    """
-    if compression not in (None, "", "gzip", "zlib"):
-        raise ValueError(f"unsupported TFRecord compression {compression!r}")
-    suffix = {"gzip": GZIP_SUFFIX, "zlib": ZLIB_SUFFIX}.get(
-        compression or "", TFRECORD_SUFFIX
-    )
-    fs.makedirs(job_dir)
-    if num_shards > 0:
-        encoded = encoded.cache()
-        try:
-            return {
-                split_value: write_split_tfrecords(
-                    encoded,
-                    job_dir,
-                    split_value.lower(),
-                    split_value,
-                    compression=compression,
-                    num_shards=num_shards,
-                )
-                for split_value in splits
-            }
-        finally:
-            encoded.unpersist()
-    df = encoded.withColumn("__pid", F.spark_partition_id())
-    wanted = set(splits)
-    compressed = compression
-
-    out_schema = T.StructType(
-        [
-            T.StructField("split", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pid = TaskContext.get().partitionId()
         handles: dict[str, tuple] = {}
         counts: dict[str, int] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            for split_value, sub in pdf.groupby("split"):
-                if split_value not in wanted:
+
+        def handle(split_value):
+            if split_value not in handles:
+                path = fs.join(job_dir, tmp_name(prefixes[split_value], pid))
+                handles[split_value] = (open_output(path, compression), path)
+                counts[split_value] = 0
+            return handles[split_value][0]
+
+        for split_value in prefixes if eager else ():
+            handle(split_value)
+        for rb in batches:
+            split_col = rb.column(split_key)
+            for split_value in pc.unique(split_col).to_pylist():
+                if split_value not in prefixes:
                     continue
-                entry = handles.get(split_value)
-                if entry is None:
-                    path = fs.join(
-                        job_dir, f".{split_value.lower()}-pid{pid:05d}{suffix}.inprogress"
-                    )
-                    entry = (open_output(path, compressed), path)
-                    handles[split_value] = entry
-                    counts[split_value] = 0
-                fh = entry[0]
-                fh.write(frame_records([bytes(b) for b in sub["example"]]))
-                counts[split_value] += len(sub)
-        for split_value, (fh, _) in handles.items():
+                sub = rb.filter(pc.equal(split_col, split_value))
+                records = sub.column("example").to_pylist() if encoded else _encode(encoder, sub)
+                handle(split_value).write(frame_records(records))
+                counts[split_value] += sub.num_rows
+        for fh, _ in handles.values():
             fh.close()
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
                 "split": list(handles),
                 "path": [p for _, p in handles.values()],
                 "n": [counts[s] for s in handles],
-            }
+            },
+            schema=pa.schema([("split", pa.string()), ("path", pa.string()), ("n", pa.int64())]),
         )
 
-    manifest = df.mapInPandas(write_partition, schema=out_schema).collect()
+    return df.mapInArrow(write, schema=_MANIFEST).collect()
+
+
+def write_all_splits(
+    df: DataFrame,
+    job_dir: str,
+    splits: list[str],
+    split_key: str = "split",
+    compression: str | None = "gzip",
+    num_shards: int = 0,
+    tag: str = "",
+    keep_empty: bool = True,
+) -> dict[str, dict[str, int]]:
+    """Encode and write every wanted split of ``df`` (K1/K2).
+
+    With ``num_shards=0`` (runner-chosen, the default) one writer pass
+    covers all splits: each partition holding rows of a split becomes one
+    shard of it. An explicit ``num_shards`` applies PER SPLIT — the
+    reference's ``WriteToTFRecord(num_shards=N)`` runs per split
+    (beam_pipeline.py:303-313), so every split gets exactly N shards,
+    empty ones included. That path encodes once into a cached frame and
+    repartitions it per split (round-robin over the encoded rows); exact
+    shard counts cost one scan per split, the auto path stays single-pass.
+
+    Shards are named ``<split><tag>-SSSSS-of-NNNNN<suffix>``. A wanted
+    split with no rows still gets one empty shard (V8 parity) unless not
+    ``keep_empty`` (streaming appends, where per-batch empty shards would
+    accumulate). Returns {split: {path: record_count}}.
+    """
+    suffix = shard_suffix(compression)
+    fs.makedirs(job_dir)
+    prefixes = {s: s.lower() + tag for s in splits}
+    if num_shards > 0:
+        manifest = []
+        encoded = encode_examples(df, split_key).cache()
+        try:
+            for split_value in splits:
+                # Round-robin repartition sorts each input partition by
+                # row bytes first, so only the Example bytes are
+                # shuffled: shard contents depend on the records alone.
+                rows = (
+                    encoded.where(F.col("split") == split_value)
+                    .select("example")
+                    .repartition(num_shards)
+                    .withColumn("split", F.lit(split_value))
+                )
+                manifest += _write_shards(
+                    rows,
+                    job_dir,
+                    {split_value: prefixes[split_value]},
+                    "split",
+                    compression,
+                    lambda prefix, pid: f"{prefix}-{pid:05d}-of-{num_shards:05d}{suffix}.inprogress",
+                    encoded=True,
+                    eager=True,
+                )
+        finally:
+            encoded.unpersist()
+    else:
+        manifest = _write_shards(
+            df, job_dir, prefixes, split_key, compression,
+            lambda prefix, pid: f".{prefix}-pid{pid:05d}{suffix}.inprogress",
+        )
 
     # Driver-side rename to contiguous shard names (metadata-only).
-    results: dict[str, dict[str, int]] = {}
     by_split: dict[str, list] = {}
     for row in manifest:
         by_split.setdefault(row["split"], []).append((row["path"], row["n"]))
+    results: dict[str, dict[str, int]] = {}
     for split_value in splits:
         shards = sorted(by_split.get(split_value, []))
-        prefix = split_value.lower()
-        if not shards:  # V8: empty-but-present split output
-            path = fs.join(job_dir, f"{prefix}-00000-of-00001{suffix}")
-            with open_output(path, compressed):
-                pass
-            results[split_value] = {path: 0}
+        prefix = prefixes[split_value]
+        if not shards:
+            if keep_empty:  # V8: empty-but-present split output
+                path = fs.join(job_dir, f"{prefix}-00000-of-00001{suffix}")
+                with open_output(path, compression):
+                    pass
+                results[split_value] = {path: 0}
             continue
-        k = len(shards)
         split_files: dict[str, int] = {}
         for i, (tmp, n) in enumerate(shards):
-            final = fs.join(job_dir, f"{prefix}-{i:05d}-of-{k:05d}{suffix}")
+            final = fs.join(job_dir, f"{prefix}-{i:05d}-of-{len(shards):05d}{suffix}")
             fs.replace(tmp, final)
             split_files[final] = n
         results[split_value] = split_files
     return results
-
-
-def _write_partition_factory(
-    job_dir: str, prefix: str, num_shards: int, suffix: str, compressed: str | None
-):
-    def write_partition(index: int, rows) -> Iterator[tuple[str, int]]:
-        path = fs.join(
-            job_dir, f"{prefix}-{index:05d}-of-{num_shards:05d}{suffix}"
-        )
-        count = 0
-        tmp = path + ".inprogress"
-        with open_output(tmp, compressed) as fh:
-            chunk: list[bytes] = []
-            for row in rows:
-                chunk.append(bytes(row["example"]))
-                if len(chunk) >= 4096:
-                    fh.write(frame_records(chunk))
-                    count += len(chunk)
-                    chunk = []
-            if chunk:
-                fh.write(frame_records(chunk))
-                count += len(chunk)
-        fs.replace(tmp, path)  # atomic publish per shard
-        yield path, count
-
-    return write_partition
-
-
-def write_split_tfrecords(
-    encoded: DataFrame,
-    job_dir: str,
-    prefix: str,
-    split_value: str,
-    compression: str | None = "gzip",
-    num_shards: int = 0,
-    skip_empty: bool = False,
-) -> dict[str, int]:
-    """Write one split's Examples as sharded TFRecord files (K2).
-
-    Returns {file_path: record_count}. Empty splits produce one empty
-    shard file — the reference's empty-but-present output parity (V8,
-    beam_pipeline.py:269-273) — unless ``skip_empty`` (streaming
-    appends, where per-batch empty shards would accumulate).
-    """
-    if compression not in (None, "", "gzip", "zlib"):
-        raise ValueError(f"unsupported TFRecord compression {compression!r}")
-    suffix = {"gzip": GZIP_SUFFIX, "zlib": ZLIB_SUFFIX}.get(
-        compression or "", TFRECORD_SUFFIX
-    )
-    split_df = encoded.where(F.col("split") == split_value).select("example")
-    if num_shards > 0:
-        split_df = split_df.repartition(num_shards)
-    rdd = split_df.rdd
-    n = max(rdd.getNumPartitions(), 1)
-    fs.makedirs(job_dir)
-    results = rdd.mapPartitionsWithIndex(
-        _write_partition_factory(job_dir, prefix, n, suffix, compression)
-    ).collect()
-    if skip_empty and results and all(count == 0 for _, count in results):
-        for path, _ in results:
-            fs.remove(path)
-        return {}
-    if not results:  # zero partitions: still touch one empty shard (V8)
-        if skip_empty:
-            return {}
-        path = fs.join(job_dir, f"{prefix}-00000-of-00001{suffix}")
-        with open_output(path, compression):
-            pass
-        results = [(path, 0)]
-    return dict(results)

@@ -13,16 +13,17 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..constants import DISCARD, TRAIN
+from ..constants import TRAIN
 from ..functions import fs
+from ..functions.partitioning import spread_to_parallelism
 from ..operators.split import normalize_split
-from ..operators.vocabulary import apply_vocabulary, fit_vocabulary
+from ..operators.vocabulary import apply_vocabulary, vocabulary_frame, vocabulary_values
 from ..schema import Schema
 from ..sinks.artifacts import write_schema_metadata, write_vocabulary_assets
-from ..sinks.tfrecord import encode_examples, write_split_tfrecords
+from ..sinks.tfrecord import write_all_splits
 
 
 def convert_stream(
@@ -37,37 +38,33 @@ def convert_stream(
     """Incrementally convert ``stream`` to TFRecords under ``job_dir``.
 
     ``train_df`` (bounded) supplies the fitted vocabulary state up
-    front; each micro-batch is split-routed, transformed, and written as
-    one shard per split per batch (shard name carries the batch id so
-    appends never collide; exactly-once comes from foreachBatch +
-    idempotent same-name writes).
+    front; each micro-batch is split-routed, transformed, and written by
+    one pass of the TFRecord writer, one shard per partition holding a
+    split (shard names carry the batch id so appends never collide;
+    exactly-once comes from foreachBatch + idempotent same-name writes).
     """
     split_key = schema.split_key
-    vocab_cols = schema.vocabulary_columns()
-    vocabs = {c: fit_vocabulary(train_df, c) for c in vocab_cols}
+    vocabs = {c: vocabulary_values(train_df, c) for c in schema.vocabulary_columns()}
 
     fs.makedirs(job_dir)
     write_vocabulary_assets(job_dir, vocabs)
     write_schema_metadata(job_dir, schema, schema.transformed_struct())
-    # Materialize fitted state once; micro-batches join against these
-    # small cached frames (broadcast on apply).
-    cached_vocabs = {c: v.cache() for c, v in vocabs.items()}
+    # Fitted state as local relations: micro-batches broadcast-join them.
+    frames = {c: vocabulary_frame(train_df.sparkSession, v) for c, v in vocabs.items()}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         work = normalize_split(batch_df, split_key)
-        for c, vocab in cached_vocabs.items():
+        for c, vocab in frames.items():
             work = apply_vocabulary(work, c, vocab)
-        encoded = encode_examples(work, split_key)
-        for split in (TRAIN, "VALIDATION", "TEST"):
-            write_split_tfrecords(
-                encoded,
-                job_dir,
-                f"{split.lower()}-batch{batch_id:06d}",
-                split,
-                compression=compression,
-                num_shards=1,
-                skip_empty=True,
-            )
+        write_all_splits(
+            spread_to_parallelism(work),
+            job_dir,
+            [TRAIN, "VALIDATION", "TEST"],
+            split_key=split_key,
+            compression=compression,
+            tag=f"-batch{batch_id:06d}",
+            keep_empty=False,
+        )
 
     writer = stream.writeStream.foreachBatch(process_batch).outputMode("append")
     if checkpoint_dir:

@@ -47,6 +47,28 @@ def test_vocabulary_freq_desc_with_value_tiebreak(spark):
     assert vocab == {"b": 0, "c": 1, "a": 2}
 
 
+def test_vocabulary_values_match_windowed_fit(spark):
+    """The driver-side ranking must equal Spark's ``count DESC, value
+    ASC`` window: ties among ASCII case variants, BMP, astral-plane and
+    fullwidth values (Spark compares UTF-8 bytes), and NULLs excluded."""
+    from tensorflow_recorder_spark.operators.vocabulary import (
+        vocabulary_frame,
+        vocabulary_values,
+    )
+
+    values = ["b", "B", "é", "ｂ", "𝔘", "😀", "日本", "a", None]
+    rows = [(v,) for i, v in enumerate(values) for _ in range(1 + i % 3)]
+    train = spark.createDataFrame(rows, "label string")
+    windowed = [
+        r["value"] for r in fit_vocabulary(train, "label").orderBy("index").collect()
+    ]
+    assert vocabulary_values(train, "label") == windowed
+    frame = vocabulary_frame(spark, windowed)
+    assert [(r["value"], r["index"]) for r in frame.collect()] == [
+        (v, i) for i, v in enumerate(windowed)
+    ]
+
+
 def test_fit_vocabulary_large_matches_windowed_fit(spark):
     """The two-phase token-scale fit must produce the EXACT windowed
     ranking — contiguous indices, freq desc, value-asc tiebreak — on
